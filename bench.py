@@ -4,27 +4,26 @@ $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line
  "sf": ...}.
 
 Headline composition:
-* frontier_schedule — the north-rule metric: a full scheduling-epoch plan
-  (eligibility gate → salted per-host politeness budget → weighted
-  priority ranking → batch dedup) over a lazily synthesized Zipf-skewed
-  frontier of SPARK_GRAFT_FRONTIER_N rows (default 2M local; the same
-  plan shape scales to 10^10 because every window partition is bounded —
-  see operators/skew.py). Reported both as seconds and as
-  frontier_urls_per_sec.
+* frontier_epoch — one warm `CrawlEngine.run_epoch` (schedule, fetch/route,
+  documents, expansion, enqueue, commit) on perfbench's `frontier_wide`
+  store at SPARK_GRAFT_FRONTIER_N frontier rows (default 2M), built
+  untimed (`engine_epoch_reps`). frontier_urls_per_sec = scheduled URLs /
+  epoch seconds, perfbench's `urls_per_s`.
 * seen_bloom — partitioned bloom build over 1M seen keys + probe of 2M
   candidates with exact verify (operators/seenset.py).
 * a representative slice of __spark_entry__ queries at the sf tables.
 
-Every query is executed with a noop write (full execution, no sink I/O).
+Every query except the epoch is executed with a noop write (full
+execution, no sink I/O).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
-from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -37,6 +36,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 FRONTIER_N = int(os.environ.get("SPARK_GRAFT_FRONTIER_N", "2000000"))
 BATCH_BUDGET = 500_000
 HOST_BUDGET = 1000
+FRONTIER_SEED = 42
 
 
 def run_noop(df) -> float:
@@ -58,173 +58,44 @@ def release_caches(spark):
     spark.sparkContext._jvm.System.gc()
 
 
-def materialize_frontier(spark, n: int, path: str):
-    """Write the synthetic frontier as a parquet snapshot (untimed setup —
-    in the engine this is the standing frontier table; an epoch READS it)."""
-    from crawler_spark.data.generators import frontier_full_from_core, gen_frontier_core
+def frontier_wide_size(n: int, batch: int) -> dict:
+    """perfbench's full `frontier_wide` workload at `n` frontier rows, with
+    this module's host budget and a batch budget of `batch`."""
+    from perfbench.workloads import SIZES
 
-    core = gen_frontier_core(spark, n)
-    # single projection — the full columns derive 1:1 from the core row;
-    # the engine schema keeps the numeric host/queue codes alongside so
-    # epochs can rank without touching the string columns
-    out = frontier_full_from_core(core, keep_core_cols=True)
-    out.write.mode("overwrite").parquet(path)
+    return dict(SIZES["frontier_wide"]["full"], n_frontier=n, host_budget=HOST_BUDGET, batch_budget=batch)
 
 
-def frontier_schedule_from_table(spark, path: str):
-    """One epoch's scheduling DAG over a stored frontier table.
+def engine_epoch_reps(spark, work_dir: str, size: dict, reps: int, warm: int = 1) -> dict:
+    """Time warm `CrawlEngine.run_epoch(0)` on a `frontier_wide` store.
 
-    Scale shape (each piece survives a 1000×-data scale-up):
-    * the parquet scan reads ONLY the numeric scheduling columns
-      (column pruning — strings never leave the file for losers);
-    * per-host budget = histogram-threshold top-k (grouped_topk_threshold):
-      no shuffle of data rows, bounded boundary windows, Zipf-proof;
-    * global batch ranking = threshold selection (global_topk_by_key);
-    * winners (≤ batch_budget) fetch their string columns via a
-      broadcast semi-join on the FIFO key — late materialization;
-    * dedup keys on xxhash64 — uniform, skew-free shuffle."""
-    from crawler_spark.operators.skew import global_topk_by_key, grouped_topk_threshold
+    Untimed set-up builds the store under `work_dir/store`
+    (perfbench/workloads.py::build_frontier_wide) and copies it aside to
+    `work_dir/pristine`. Every epoch, the `warm` untimed ones and the `reps`
+    timed ones, runs on a fresh copy of the pristine store, so each does the
+    same work; `work_dir/store` keeps the last epoch's commit. Returns the
+    timed seconds and the URLs each epoch scheduled."""
+    from perfbench.workloads import build_frontier_wide
 
-    slim = spark.read.parquet(path).select(
-        "enqueued_seq", "host_id", "queue_code", "scope_code",
-        "not_before_epoch", "parent_epoch",
-    )
-    eligible = slim.filter(
-        (F.col("not_before_epoch") <= 0) & (F.col("parent_epoch") < 0)
-    )
-    kdf = eligible.withColumn(
-        "_key", F.shiftleft(F.col("scope_code").cast("long"), 51) + F.col("enqueued_seq")
-    )
-    offered = grouped_topk_threshold(kdf, "host_id", "_key", HOST_BUDGET)
-    pop_key = (
-        F.shiftleft(F.col("scope_code").cast("long"), 50)
-        + F.shiftleft(F.col("queue_code").cast("long"), 46)
-        + F.col("enqueued_seq")
-    )
-    ranked = global_topk_by_key(
-        offered.withColumn("_pop_key", pop_key), "_pop_key", BATCH_BUDGET
-    )
-    winners = ranked.select("enqueued_seq", "pop_index")
-    full = spark.read.parquet(path).select("enqueued_seq", "url", "url_hash", "host", "queue")
-    batch = full.join(F.broadcast(winners), "enqueued_seq")
-    return batch.dropDuplicates(["url_hash"]).select("pop_index", "url", "host", "queue")
+    from crawler_spark.storage.snapshots import SnapshotStore
 
-
-def full_epoch_from_table(spark, path: str, batch: int = BATCH_BUDGET, seq_bound: int | None = None):
-    """Schedule + fetch/process simulation — the whole epoch's work per
-    scheduled URL: coordinate canonicalization (regex parse, the Arrow/
-    codegen hot path), URN rendering, artifact content hashing (sha1 +
-    sha256 over ~1 KB of deterministic bytes per URL — the reference
-    hashes every downloaded artifact, baseHandler.js:36-61), seen-key
-    hashing, and batch dedup. CPU-dominated per scheduled URL, which is
-    what an epoch is at 100 TB — scheduling selection is the cheap part."""
-    from crawler_spark.data.generators import frontier_full_from_core
-    from crawler_spark.functions.coordinates import to_urn, with_parsed_coordinates_fast
-    from crawler_spark.operators.skew import grouped_topk_threshold, sampled_topk_per_group
-
-    slim = spark.read.parquet(path).select(
-        "enqueued_seq", "host_id", "queue_code", "scope_code", "rev_minor",
-        "attempt_count", "not_before_epoch", "parent_epoch",
-    )
-    eligible = slim.filter(
-        (F.col("not_before_epoch") <= 0) & (F.col("parent_epoch") < 0)
-    )
-    kdf = eligible.withColumn(
-        "_key", F.shiftleft(F.col("scope_code").cast("long"), 51) + F.col("enqueued_seq")
-    )
-    offered = sampled_topk_per_group(kdf, "host_id", "_key", max(HOST_BUDGET, batch // 500))
-    # persist the (small) offered set: the batch-cut selection makes
-    # several passes and must not recompute the full-table selection
-    offered = offered.persist()
-    # batch cut: exact top-`batch` SET by the pop key via the same
-    # histogram-threshold selection — no global sort; at scale the pop key
-    # itself is the order token (dense pop_index is a small-batch/fixture
-    # concern, assigned by the engine's pop kernel, not re-sorted here)
-    pop_key = (
-        F.shiftleft(F.col("scope_code").cast("long"), 50)
-        + F.shiftleft(F.col("queue_code").cast("long"), 46)
-        + F.col("enqueued_seq")
-    )
-    # bucket expression for the clustered pop key: (scope,queue) cluster in
-    # the high bits, equi-width over seq within a cluster (equi-width over
-    # the raw key would collapse each cluster into one bucket). Seq bound
-    # from a tiny agg over the persisted offered set — only bucket
-    # GRANULARITY depends on it, never correctness.
-    if seq_bound is None:
-        seq_bound = int(offered.agg(F.max("enqueued_seq").alias("m")).collect()[0]["m"] or 1) + 1
-    pop_bucket = (
-        (F.col("scope_code") * 4 + F.col("queue_code")) * 512
-        + F.least((F.col("enqueued_seq") * 512 / F.lit(seq_bound)).cast("int"), F.lit(511))
-    ).cast("int")
-    winners = grouped_topk_threshold(
-        offered.withColumn("_pop_key", pop_key).withColumn("_one", F.lit(1)),
-        "_one", "_pop_key", batch, n_buckets=8 * 512, bucket_expr=pop_bucket,
-    )
-    # late materialization WITHOUT a join: the winners carry the numeric
-    # core; string columns are a pure projection of it (columnar store
-    # equivalent: point reads of the winners' row groups)
-    full = frontier_full_from_core(winners.select(
-        "enqueued_seq", "host_id", "queue_code", "scope_code", "rev_minor",
-        "attempt_count", "not_before_epoch", "parent_epoch",
-    ))
-    # batch dedup BEFORE the per-URL processing (r5): equal url_hash ⇒
-    # equal url ⇒ equal derived columns, so deduping first is
-    # value-identical while (a) the exchange moves the slim pre-hash rows,
-    # not rows carrying sha/urn strings, and (b) duplicate URLs are never
-    # hashed/parsed at all — the plan shape that matters at 10^10 where
-    # re-discovered URLs dominate
-    deduped = full.select(
-        "url", F.col("url_hash").alias("uh"), F.col("enqueued_seq").alias("_seq")
-    ).dropDuplicates(["uh"])
-    parsed = with_parsed_coordinates_fast(deduped)
-    content = F.repeat(F.concat(F.col("canonical_url"), F.lit("|artifact-bytes|")), 24)
-    return parsed.select(
-        F.col("_seq").alias("pop_key"),
-        F.col("uh").alias("url_hash"),
-        to_urn(F.col("type"), F.col("provider"), F.col("namespace"),
-               F.col("name"), F.col("revision")).alias("urn"),
-        F.sha1(content).alias("sha1_hex"),
-        F.sha2(content, 256).alias("sha256_hex"),
-        F.xxhash64(F.concat(F.col("type"), F.lit("@"), F.col("canonical_url"))).alias("seen_hash"),
-    )
-
-
-def frontier_schedule_plan(spark, n: int):
-    """One epoch's scheduling DAG over the synthetic frontier (the
-    headline job; mirrors operators/epoch.py minus the fetch join).
-
-    Scale shape (each piece survives a 1000×-data scale-up):
-    * rank on the NUMERIC core only (~24 B/row through every shuffle);
-      strings materialize late, for the selected ≤ host_budget·n_hosts
-      minority (columnar late materialization);
-    * per-host budget = salted two-phase top-k — window partitions stay
-      bounded under Zipf host skew;
-    * global batch ranking = threshold selection (count + quantile sketch
-      + bounded exact rank) — no stage sorts more than ~batch_budget rows
-      in one task regardless of frontier size;
-    * dedup keys on xxhash64 — uniform, skew-free shuffle."""
-    from crawler_spark.data.generators import frontier_full_from_core, gen_frontier_core
-    from crawler_spark.operators.skew import global_topk_by_key, salted_topk_per_group
-
-    core = gen_frontier_core(spark, n)
-    eligible = core.filter(
-        (F.col("not_before_epoch") <= 0) & (F.col("parent_epoch") < 0)
-    )
-    offered, _deferred = salted_topk_per_group(
-        eligible, ["host_id"], ["scope_code", "enqueued_seq"], HOST_BUDGET,
-        n_salts=32, salt_on="enqueued_seq",
-    )
-    # unique ascending pop key: (scope, weight, seq) packed into one long
-    pop_key = (
-        F.shiftleft(F.col("scope_code").cast("long"), 50)
-        + F.shiftleft(F.col("queue_code").cast("long"), 46)
-        + F.col("enqueued_seq")
-    )
-    keyed = offered.withColumn("_pop_key", pop_key)
-    ranked = global_topk_by_key(keyed, "_pop_key", BATCH_BUDGET)
-    # late materialization + dedup of the scheduled minority
-    full = frontier_full_from_core(ranked)
-    return full.dropDuplicates(["url_hash"]).select("pop_index", "url", "host", "queue")
+    live, pristine = os.path.join(work_dir, "store"), os.path.join(work_dir, "pristine")
+    for d in (live, pristine):
+        shutil.rmtree(d, ignore_errors=True)
+    store = SnapshotStore(spark, live)
+    engine = build_frontier_wide(spark, store, FRONTIER_SEED, size).engine(spark, store)
+    shutil.copytree(live, pristine)
+    secs = []
+    for rep in range(warm + reps):
+        if rep:
+            shutil.rmtree(live)
+            shutil.copytree(pristine, live)
+        t0 = time.time()
+        scheduled = engine.run_epoch(0)["scheduled"]
+        if rep >= warm:
+            secs.append(time.time() - t0)
+    shutil.rmtree(pristine)
+    return {"reps": secs, "scheduled": scheduled}
 
 
 def seen_bloom_job(spark):
@@ -247,58 +118,22 @@ def main():
 
     queries: dict[str, float] = {}
 
-    # the standing frontier table lives on tmpfs: this VM's virtual disk
-    # has wildly variable throughput that poisons the scan timings, and
-    # the epoch metric is about scheduling compute, not disk IO
+    # the frontier store lives on tmpfs: a virtual disk's throughput can
+    # vary widely enough to poison the epoch timings
     bench_dir = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    table = f"{bench_dir}/frontier_bench_{FRONTIER_N}"
-    if not os.path.exists(os.path.join(table, "_SUCCESS")):
-        materialize_frontier(spark, FRONTIER_N, table)  # untimed setup: the standing frontier table
-    # one untimed warm epoch (identical literals) primes whole-stage
-    # codegen + JIT — steady-state epochs reuse compiled plans, and the
-    # steady state is what the metric tracks (scripts/frontier_job.py
-    # uses the same protocol; cold-JIT swings are ±5-10 s on this VM)
-    #
-    # AQE OFF for the epoch job only (r5, measured): every shuffle in the
-    # epoch plan is pre-sized (≤16 MB at 32 partitions, histogram/boundary
-    # slices bounded by construction), so adaptive re-optimization buys
-    # nothing here while its per-exchange re-planning inserts ~10 serial
-    # driver pauses ≈ 2 s/epoch (stage-trace audit in BASELINE.md round 5)
-    # — pure serial-floor cost that also depresses N→4N efficiency. The
-    # rest of the suite keeps AQE on (joins/dedup benefit); a production
-    # 100 TB epoch would re-enable it where partition sizes are unknown
-    # (skew-join safety) — this is a per-job tuning choice, not a default.
-    @contextmanager
-    def aqe_off():
-        # save/restore (not hard-coded 'true') so the session's own AQE
-        # default — whatever get_spark or a caller set — survives the
-        # epoch-job scope even if it changes in a future round
-        saved = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", saved)
-
-    with aqe_off():
-        run_noop(full_epoch_from_table(spark, table, batch=BATCH_BUDGET, seq_bound=FRONTIER_N))
+    work = f"{bench_dir}/frontier_bench_{FRONTIER_N}"
+    epoch = engine_epoch_reps(spark, work, frontier_wide_size(FRONTIER_N, BATCH_BUDGET), reps=1)
+    shutil.rmtree(work)
+    queries["frontier_epoch"] = epoch["reps"][0]
     release_caches(spark)
-    # warm the Python-worker/Arrow path the same way (the seen-set probe is
-    # the process's first applyInPandas otherwise: worker-pool spawn + Arrow
+    # warm the Python-worker/Arrow path (the seen-set probe is the
+    # process's first applyInPandas otherwise: worker-pool spawn + Arrow
     # codec JIT added ~2.5-4 s to the r3 timed number; isolated steady state
     # is ~3 s — see BASELINE.md round-4 section). In the engine the probe
     # runs every epoch, so steady state is the representative measurement.
     run_noop(seen_bloom_job(spark))
     release_caches(spark)
     t0 = time.time()
-    with aqe_off():  # epoch-job scope only
-        queries["frontier_epoch"] = run_noop(
-            full_epoch_from_table(spark, table, batch=BATCH_BUDGET, seq_bound=FRONTIER_N)
-        )
-    # same per-query isolation as the loop below: the epoch's internal
-    # `offered` persist must not sit in executor memory while seen_bloom
-    # (or anything after it) is timed
-    release_caches(spark)
     queries["seen_bloom"] = run_noop(seen_bloom_job(spark))
     release_caches(spark)
 
@@ -343,16 +178,16 @@ def main():
         # pressure), which is not what the per-query numbers should show
         release_caches(spark)
 
-    total = time.time() - t0
+    total = queries["frontier_epoch"] + time.time() - t0
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     out = {
-        "metric": "headline suite wall time (frontier schedule+dedup, bloom seen-set, entry queries)",
+        "metric": "headline suite wall time (engine frontier epoch, bloom seen-set, entry queries)",
         "value": round(total, 3),
         "unit": "sec",
         "queries": {k: round(v, 3) for k, v in queries.items()},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "frontier_n": FRONTIER_N,
-        "frontier_urls_per_sec": round(FRONTIER_N / queries["frontier_epoch"]),
+        "frontier_urls_per_sec": round(epoch["scheduled"] / queries["frontier_epoch"]),
         "cpus": CPUS,
     }
     print(json.dumps(out))

@@ -10,7 +10,7 @@ Two families:
    registries and recorded HTTP fixtures (/root/reference/test/fixtures/).
 
 2. **Scale generators (pure Spark expressions, lazy)** —
-   `gen_frontier_scale`, `gen_documents_spans`. `spark.range(N)` + hash
+   `gen_frontier_core`, `gen_documents_spans`. `spark.range(N)` + hash
    expressions synthesize arbitrarily large frontiers / span corpora
    without materializing rows driver-side (SURVEY.md §7 hard part (e):
    the 10^10 frontier is lazy).
@@ -282,10 +282,8 @@ def robots_df(spark: SparkSession, rows: list[dict] | None = None, **kw) -> Data
 def gen_frontier_core(spark: SparkSession, n: int, seed: int = 42, n_hosts: int = 1000) -> DataFrame:
     """Numeric core of the synthetic frontier — the columns scheduling
     decisions need (host id, queue code, eligibility, FIFO seq), nothing
-    string-typed. Rank/filter/budget on THIS (≈24 B/row through the
-    shuffle); materialize full rows only for the selected minority via
-    `frontier_full_from_core` — late materialization, the plan shape a
-    columnar engine wants at 10^10 rows.
+    string-typed (≈24 B/row). Callers project the engine's string
+    columns from these (perfbench/workloads.py::synthetic_frontier).
 
     Skew: host popularity ~ Zipf via pow of a uniform hash (hot heads),
     queue mix 3/7/80/10."""
@@ -308,54 +306,6 @@ def gen_frontier_core(spark: SparkSession, n: int, seed: int = 42, n_hosts: int 
         F.lit(-1).alias("parent_epoch"),
         F.pmod(h, F.lit(10)).cast("int").alias("rev_minor"),
     )
-
-
-_QUEUE_NAMES_BY_CODE = ("immediate", "soon", "normal", "later")
-
-
-def frontier_full_from_core(core: DataFrame, keep_core_cols: bool = False) -> DataFrame:
-    """Materialize the full (string-bearing) frontier rows from core rows —
-    a pure projection over (enqueued_seq, host_id, queue_code, …).
-    `keep_core_cols` also carries the numeric scheduling columns through
-    (the at-rest frontier schema ranks on those without string work)."""
-    provider = F.element_at(
-        F.array(*[F.lit(p) for p in FETCH_PROVIDERS]),
-        (F.pmod(F.col("host_id"), F.lit(len(FETCH_PROVIDERS))) + 1).cast("int"),
-    )
-    spec_type = F.element_at(
-        F.array(*[F.lit(_PROVIDER_TO_SPEC_TYPE[p]) for p in FETCH_PROVIDERS]),
-        (F.pmod(F.col("host_id"), F.lit(len(FETCH_PROVIDERS))) + 1).cast("int"),
-    )
-    name = F.concat(F.lit("pkg-"), F.col("enqueued_seq"))
-    revision = F.concat(F.lit("1."), F.col("rev_minor"), F.lit(".0"))
-    url = F.concat(
-        F.lit("cd:/"), spec_type, F.lit("/"), provider, F.lit("/-/"), name, F.lit("/"), revision
-    )
-    queue = F.element_at(
-        F.array(*[F.lit(q) for q in _QUEUE_NAMES_BY_CODE]), F.col("queue_code") + 1
-    )
-    return core.select(
-        "enqueued_seq",
-        url.alias("url"),
-        spec_type.alias("type"),
-        provider.alias("provider"),
-        F.lit(None).cast("string").alias("namespace"),
-        name.cast("string").alias("name"),
-        revision.alias("revision"),
-        F.concat(F.lit("host-"), F.col("host_id")).alias("host"),
-        queue.alias("queue"),
-        F.when(F.col("scope_code") == 0, "local").otherwise("global").alias("scope"),
-        F.lit("default").alias("policy"),
-        "attempt_count", "not_before_epoch", "parent_epoch",
-        F.xxhash64(url).alias("url_hash"),
-        *([c for c in core.columns if c == "pop_index"]),
-        *(["host_id", "queue_code", "scope_code", "rev_minor"] if keep_core_cols else []),
-    )
-
-
-def gen_frontier_scale(spark: SparkSession, n: int, seed: int = 42, n_hosts: int = 1000) -> DataFrame:
-    """Full N-row synthetic frontier (core → full projection)."""
-    return frontier_full_from_core(gen_frontier_core(spark, n, seed, n_hosts))
 
 
 def gen_documents_spans(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:

@@ -176,45 +176,10 @@ def with_parsed_coordinates(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def with_parsed_coordinates_fast(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Split-based fast-path parser for URLs already in canonical
-    ``cd:/type/provider/namespace/name[/revision[/tool/t/v]]`` shape —
-    ~8× faster than the regex path (measured: one `split` vs seven
-    backtracking `regexp_extract` evaluations per row). Semantics are
-    identical on well-formed cd:/ URLs (parity-tested); arbitrary-scheme
-    URLs must go through `with_parsed_coordinates`. This is the epoch
-    hot path at 10^10 rows, where URLs are canonical by construction.
-    """
-    p = F.split(F.col(url_col), "/")
-    # try_element_at: optional segments may be absent (ANSI element_at throws)
-    typ = F.lower(F.try_element_at(p, F.lit(2)))
-    prov = F.lower(F.try_element_at(p, F.lit(3)))
-    ns = F.nullif(F.try_element_at(p, F.lit(4)), F.lit("-"))
-    name = F.try_element_at(p, F.lit(5))
-    rev = F.nullif(F.try_element_at(p, F.lit(6)), F.lit(""))
-    tool = F.when(F.try_element_at(p, F.lit(7)) == "tool", F.lower(F.try_element_at(p, F.lit(8))))
-    tool_version = F.when(tool.isNotNull(), F.lower(F.try_element_at(p, F.lit(9))))
-    canon = to_url(typ, prov, ns, name, rev, tool, tool_version)
-    return (
-        df.withColumn("type", typ)
-        .withColumn("provider", prov)
-        .withColumn("namespace", ns)
-        .withColumn("name", name)
-        .withColumn("revision", rev)
-        .withColumn("tool", tool)
-        .withColumn("tool_version", tool_version)
-        .withColumn("canonical_url", canon)
-        .withColumn("url_hash", url_hash(F.col("canonical_url")))
-        .withColumn("host", host_for_provider(F.col("provider")))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Arrow/pandas UDF variant — identical semantics, Python-side. Used to
 # demonstrate/validate the vectorized-UDF path (north rule) and as an
-# extension point; the built-in regex path is general, the split fast
-# path above is the hot loop (measured 8M rows/16 cores: split 1.6 s,
-# Arrow UDF 6.8 s, regex built-ins 11.9 s).
+# extension point; the built-in regex path above is the one the engine runs.
 # ---------------------------------------------------------------------------
 
 _PY_COORD_RE = re.compile(r".*:/*([^/]+)/([^/]+)/([^/]+)/([^/]+)/?([^/]+)?(/tool/.+)?")

@@ -187,6 +187,10 @@ def enqueue_batch(
     fresh2 = fresh.withColumn("_skey", skey).withColumn(
         "_krank", F.row_number().over(w_key)
     )
+    # `seen` is unique on seen_key by construction (every writer adds only
+    # absent keys with _krank == 1; ops only removes keys), so the left
+    # join needs no distinct — and no extra shuffle of the whole seen set
+    seen_flags = seen.select(F.col("seen_key").alias("_skey"), F.lit(True).alias("_ex"))
     if seen_filters is not None:
         from crawler_spark.operators.seenset import probe_candidates
 
@@ -212,20 +216,12 @@ def enqueue_batch(
         probed = probe_candidates(
             fresh2, seen_filters, "url_hash", n_filter_parts
         ).localCheckpoint(eager=False)
-        verified = probed.filter(F.col("maybe_seen")).join(
-            seen.select(F.col("seen_key").alias("_skey")).distinct()
-            .withColumn("_ex", F.lit(True)),
-            "_skey", "left",
-        )
+        verified = probed.filter(F.col("maybe_seen")).join(seen_flags, "_skey", "left")
         flagged = probed.filter(~F.col("maybe_seen")).withColumn(
             "_ex", F.lit(None).cast("boolean")
         ).unionByName(verified).drop("maybe_seen")
     else:
-        flagged = fresh2.join(
-            seen.select(F.col("seen_key").alias("_skey")).distinct()
-            .withColumn("_ex", F.lit(True)),
-            "_skey", "left",
-        )
+        flagged = fresh2.join(seen_flags, "_skey", "left")
     flagged = flagged.cache()
     known = F.coalesce(F.col("_ex"), F.lit(False)) | (F.col("_krank") > 1)
     unseen = flagged.filter(is_reprocess | ~known)

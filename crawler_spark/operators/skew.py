@@ -1,4 +1,5 @@
-"""Skew handling: salted two-phase top-k per group.
+"""Skew handling: salted two-phase top-k per group, a dense global
+sequence without a single-partition sort, and a small-input spreader.
 
 The politeness budget and FIFO ranking windows partition by `host` /
 `(scope, queue)`. At 10^10 frontier rows a hot host (Zipf head) makes a
@@ -74,219 +75,6 @@ def salted_topk_per_group(
     topk = phase2.filter(F.col(rank_col) <= k)
     overflow2 = phase2.filter(F.col(rank_col) > k).drop(rank_col)
     return topk, overflow1.unionByName(overflow2)
-
-
-def grouped_topk_threshold(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int,
-    n_buckets: int = 4096,
-    bucket_expr: Column | None = None,
-) -> DataFrame:
-    """Exact per-group top-k (smallest `key_col`, unique keys) WITHOUT
-    shuffling the data rows — the 10^10-scale budget gate.
-
-    A window/sort implementation shuffles and sorts ALL N rows to keep
-    k·|groups| of them; at scale that shuffle is the job. Instead:
-
-    1. histogram pass — `groupBy(group, bucket(key)).count()`: map-side
-       combined, shuffles only |groups|·n_buckets tiny count rows;
-    2. per group, a running sum over its (tiny) histogram finds the
-       bucket containing the k-th smallest key and the number of rows
-       `below` it (exact — histograms are exact counts);
-    3. decision pass — rows in buckets below the threshold pass outright;
-       rows in the single boundary bucket (≈ group_count/n_buckets rows)
-       are exactly ranked with a window and topped up to k.
-
-    Two O(N) scans with only map-side aggregation + a window over the
-    small boundary slice. Result = exactly the per-group top-k set
-    (membership; ranks are not attached — callers that need global order
-    re-rank the selected minority).
-    """
-    if bucket_expr is not None:
-        # caller-supplied monotone bucketing — REQUIRED when the key is
-        # piecewise-clustered (e.g. category bits in the high word): an
-        # equi-width histogram would drop every cluster into one bucket
-        # and the boundary slice degenerates to the whole cluster. The
-        # expression must be non-decreasing in key_col with values in
-        # [0, n_buckets).
-        bucket = bucket_expr
-    else:
-        stats = df.agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi")).collect()[0]
-        lo, hi = stats["lo"], stats["hi"]
-        if lo is None or hi is None:
-            return df  # empty input
-        span = max(int(hi) - int(lo) + 1, 1)
-        bucket = ((F.col(key_col) - F.lit(int(lo))).cast("double") / F.lit(span) * n_buckets).cast("int")
-        bucket = F.least(bucket, F.lit(n_buckets - 1))
-
-    hist = df.groupBy(F.col(group_col), bucket.alias("_b")).agg(F.count("*").alias("_c"))
-    w_cum = (
-        Window.partitionBy(group_col).orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = hist.withColumn("_below", F.coalesce(F.sum("_c").over(w_cum), F.lit(0)))
-    # threshold bucket: first bucket where below + count ≥ k
-    thresh = (
-        marked.filter(F.col("_below") + F.col("_c") >= k)
-        .groupBy(group_col)
-        .agg(F.min("_b").alias("_tb"))
-    )
-    # groups with < k rows entirely: no threshold bucket → keep everything
-    info = (
-        hist.groupBy(group_col).agg(F.sum("_c").alias("_total"))
-        .join(thresh, group_col, "left")
-        .join(marked.select(group_col, F.col("_b").alias("_tb"), F.col("_below").alias("_tb_below")),
-              [group_col, "_tb"], "left")
-    )
-    binfo = F.broadcast(info)  # |groups| rows
-
-    tagged = df.withColumn("_b", bucket).join(binfo, group_col, "left")
-    below = tagged.filter(F.col("_tb").isNull() | (F.col("_b") < F.col("_tb")))
-    boundary = tagged.filter(F.col("_b") == F.col("_tb"))
-    w_bound = Window.partitionBy(group_col).orderBy(key_col)
-    bound_take = (
-        boundary.withColumn("_r", F.row_number().over(w_bound))
-        .filter(F.col("_r") + F.col("_tb_below") <= k)
-        .drop("_r")
-    )
-    drop_cols = ["_b", "_tb", "_total", "_tb_below"]
-    return below.unionByName(bound_take).drop(*drop_cols)
-
-
-def sampled_topk_per_group(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int,
-    sample_mod: int = 64,
-    margin: float = 1.4,
-) -> DataFrame:
-    """Exact per-group top-k (smallest unique `key_col`) via sampled
-    thresholds — the cheapest scale shape of the three top-k operators.
-
-    Where the histogram variant's `groupBy(group, bucket)` explodes into
-    |groups|·n_buckets aggregation groups (Spark falls back to sort-based
-    aggregation and quietly sorts everything), this one never creates
-    more than |groups| aggregation groups:
-
-    1. per-group totals (`groupBy(group).count()` — tiny);
-       groups with ≤ k rows pass whole, untouched;
-    2. a deterministic 1/sample_mod hash-sample of the big groups gets an
-       exact in-sample rank (window over the small sample); the
-       per-group threshold is the sample key at rank
-       `margin · k · m_g / n_g` — an over-estimate of the true k-th key
-       with high probability (TeraSort-style range estimation);
-    3. big-group rows under their threshold (≈ margin·k per group) are
-       exactly ranked and cut at k. A verify count catches sample
-       undershoot and falls back to an exact window for the (rare)
-       affected groups — exactness never rests on the sample.
-
-    Three O(N) scans (agg / filter / filter), windows only over
-    sample-sized and margin·k-sized slices. Deterministic: the sample is
-    a hash of the key, not rand().
-    """
-    # ONE aggregation pass produces both the totals and the per-group
-    # sorted key sample (map-side combinable); the threshold is then a
-    # pure array projection on the tiny per-group result — a single
-    # broadcast barrier instead of three (totals, sample-rank, threshold).
-    sampled_key = F.when(
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(sample_mod)) == 0, F.col(key_col)
-    )
-    info = df.groupBy(group_col).agg(
-        F.count("*").alias("_n"),
-        F.sort_array(F.collect_list(sampled_key)).alias("_samp"),
-    )
-    target = F.least(
-        F.greatest(F.ceil(F.lit(margin) * k * F.size("_samp") / F.col("_n")), F.lit(1)),
-        F.size("_samp"),
-    )
-    info = info.withColumn(
-        "_thresh", F.when(F.size("_samp") > 0, F.try_element_at("_samp", target.cast("int")))
-    ).drop("_samp")
-    # ONE broadcast subtree serves the small-group anti-join AND the
-    # candidate join (identical plan → ReusedExchange; the old shape
-    # broadcast two different projections of `big`, evaluating the full
-    # aggregation twice — a measured extra barrier per epoch)
-    big = F.broadcast(info.filter(F.col("_n") > k))
-    small_rows = df.join(big, group_col, "left_anti")
-
-    cand = df.join(big, group_col).filter(
-        F.col("_thresh").isNull() | (F.col(key_col) <= F.col("_thresh"))
-    )
-    w_exact = Window.partitionBy(group_col).orderBy(key_col)
-    # undershoot detection as a WINDOW over the already-ranked candidates
-    # (≤ margin·k rows per group) instead of an agg+join: a group came up
-    # short iff its max rank < k — every cand row is from `big` (_n > k),
-    # so max_r < k already implies the group has more rows than the
-    # sample threshold admitted.
-    cand_ranked = cand.withColumn("_r", F.row_number().over(w_exact)).withColumn(
-        "_short", F.max("_r").over(Window.partitionBy(group_col)) < k
-    )
-    helpers = ["_n", "_thresh", "_r", "_short"]
-    topk_big = cand_ranked.filter((F.col("_r") <= k) & ~F.col("_short")).drop(*helpers)
-    # verify/redo path stays IN the plan (no eager count — a driver-side
-    # branch would execute the whole selection DAG once extra): when no
-    # group undershot, `short` is empty and the redo window is a no-op
-    # over an empty broadcast. Exactness never rests on the sample.
-    short = cand_ranked.filter(F.col("_short")).select(group_col).distinct()
-    redo = (
-        df.join(F.broadcast(short), group_col)
-        .withColumn("_r", F.row_number().over(w_exact))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-    )
-    return small_rows.unionByName(topk_big).unionByName(redo)
-
-
-def global_topk_by_key(
-    df: DataFrame,
-    key_col: str,
-    k: int,
-    rank_col: str = "pop_index",
-    rel_err: float = 0.001,
-) -> DataFrame:
-    """Exact global top-k by a UNIQUE ascending long key, at any scale.
-
-    Salting cannot help when k itself is large (per-salt top-k prunes
-    nothing once k ≥ rows/salt, and the merge sort of k·n_salts rows
-    serializes). Instead: selection by threshold —
-
-    1. one O(N) pass counts N (map-side partial agg);
-    2. `approxQuantile` (Greenwald-Khanna, one O(N) pass, merged
-       sketches) finds a cutoff t with a slack factor so that
-       |{key ≤ t}| ≥ k with overwhelming probability; a verify count
-       retries with more slack on undershoot (exactness never depends
-       on the sketch — only the candidate-set size does);
-    3. the ≤ k·(1+slack) survivors get an exact row_number in ONE
-       bounded partition (bounded by the slack, not by N).
-
-    Wall-clock = 2–3 parallel scans + one ~k-row sort. Deterministic
-    because the key is unique — the returned set and ranks are exactly
-    the global top-k regardless of which cutoff the sketch produced.
-    """
-    # 2-3 passes over the same input (count/sketch/filter). localCheckpoint,
-    # not persist: the returned plan still references the materialized
-    # input, so an in-function unpersist is impossible and a persist
-    # would leak one CacheManager entry per call; checkpoint blocks are
-    # ContextCleaner-freed once the result is garbage-collected.
-    df = df.localCheckpoint(eager=False)
-    n = df.count()
-    if n <= k:
-        w = Window.orderBy(key_col)
-        return df.withColumn(rank_col, F.row_number().over(w))
-    slack = 1.15
-    for _ in range(3):
-        q = min(1.0, k / n * slack + rel_err)
-        cutoff = df.stat.approxQuantile(key_col, [q], rel_err)[0]
-        cand = df.filter(F.col(key_col) <= cutoff)
-        if q >= 1.0 or cand.count() >= k:
-            break
-        slack *= 1.5
-    else:
-        cand = df  # sketch kept undershooting — exactness over speed
-    w = Window.orderBy(key_col)
-    return cand.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
 def dense_global_seq(

@@ -1,11 +1,13 @@
-"""Snapshot store: parquet tables + atomic-rename JSON manifests.
+"""Snapshot store: parquet tables + atomically linked JSON manifests.
 
 Stands in for Iceberg (jars unavailable in this sandbox — SURVEY.md §7 M2
 fallback) while keeping the two properties the engine needs:
 
 1. **Atomic multi-table commit**: an epoch writes new parquet files for
-   every changed table, then promotes them with ONE `os.rename` of the
-   manifest — readers see either snapshot S or S+1, never a mix. This is
+   every changed table, then promotes them with ONE `os.link` of the
+   manifest, which raises `CommitConflict` rather than overwrite a
+   concurrent commit of the same version — readers see either snapshot
+   S or S+1, never a mix. This is
    the batch replacement for the reference's visibility-timeout
    ack-once semantics (/root/reference/ghcrawler/providers/queuing/
    storageQueue.js:54-116): rows scheduled in epoch N are removed by the
@@ -29,6 +31,11 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+class CommitConflict(Exception):
+    """Another commit published the version this commit was planned to
+    write; the caller must re-plan from the newer snapshot."""
 
 
 @dataclass
@@ -239,5 +246,15 @@ class SnapshotStore:
         tmp = self._manifest_path(version) + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
-        os.rename(tmp, self._manifest_path(version))  # atomic promote
+        # atomic promote that never replaces: link() fails if another
+        # committer already published this version (rename would silently
+        # overwrite it and lose that commit's changes)
+        try:
+            os.link(tmp, self._manifest_path(version))
+        except FileExistsError:
+            raise CommitConflict(
+                f"snapshot v{version} was committed concurrently; re-plan from the new snapshot"
+            ) from None
+        finally:
+            os.unlink(tmp)
         return Snapshot(version=version, epoch=epoch, tables=tables, meta=manifest["meta"])

@@ -1,28 +1,29 @@
-"""One full scheduling+processing epoch at a given parallelism — the
-scaling probe. Usage:
-  python scripts/frontier_job.py <n_rows> <cpus> [batch] [table_path] [reps]
+"""One engine epoch at a given parallelism — the scaling probe. Usage:
+  python scripts/frontier_job.py <n_rows> <cpus> [batch] [work_dir] [reps] [warm]
 Prints one JSON line with per-rep seconds and the median.
 
-Protocol notes (see BASELINE.md):
-* setup (untimed): materialize the frontier parquet snapshot once —
-  the engine's standing frontier table; epochs READ it.
-* one untimed warm epoch with IDENTICAL parameters primes whole-stage
-  codegen + JIT (steady-state epochs reuse compiled plans).
-* spark.catalog.clearCache() between reps — each epoch persists its
-  offered set; accumulation would distort later reps.
+Each rep times `CrawlEngine.run_epoch(0)` on a fresh copy of perfbench's
+`frontier_wide` store at <n_rows> frontier rows, batch budget [batch] and
+bench.py's host budget, through `bench.engine_epoch_reps` (the function
+bench.py's `frontier_epoch` row uses):
+* setup (untimed): build the store under [work_dir] and copy it aside;
+  [work_dir] is removed at exit.
+* [warm] untimed epochs (default 1) prime whole-stage codegen + JIT
+  (steady-state epochs reuse compiled plans); 0 → cold timing (use the
+  same on both levels).
 * -XX:ActiveProcessorCount pins the JVM's visible CPUs so GC/JIT pools
   don't use the whole machine in the small configuration.
-* shuffle dirs on /dev/shm — this VM's virtual disk has high-variance
-  throughput; production shuffle runs on local NVMe.
+* shuffle dirs on /dev/shm — a virtual disk's throughput can vary too
+  much for timing; production shuffle runs on local NVMe.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,41 +31,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main():
     n, cpus = int(sys.argv[1]), int(sys.argv[2])
     batch = int(sys.argv[3]) if len(sys.argv) > 3 else max(n // 8, 100_000)
-    table = sys.argv[4] if len(sys.argv) > 4 else f"/tmp/frontier_bench_{n}"
+    work = sys.argv[4] if len(sys.argv) > 4 else f"/tmp/frontier_bench_{n}"
     reps = int(sys.argv[5]) if len(sys.argv) > 5 else 3
-    warm = int(sys.argv[6]) if len(sys.argv) > 6 else 1  # 0 → cold timing (use the same on both levels)
+    warm = int(sys.argv[6]) if len(sys.argv) > 6 else 1
     from crawler_spark.session import get_spark
-    from bench import full_epoch_from_table, materialize_frontier
+    from bench import engine_epoch_reps, frontier_wide_size
 
     spark = get_spark(
         "frontier_job", parallelism=cpus, shuffle_partitions=cpus,
         extra_conf={
             "spark.driver.extraJavaOptions": f"-XX:ActiveProcessorCount={cpus}",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
             "spark.local.dir": "/dev/shm/spark-bench",
-            # epoch shuffles are pre-sized/bounded by construction; AQE's
-            # per-exchange re-planning costs ~10 serial driver pauses
-            # (~2 s/epoch measured r5, BASELINE.md) — pure serial-floor
-            # cost at both cluster sizes, so the scaling job runs without
-            # it (same setting at N and 4N; bench.py scopes it identically)
-            "spark.sql.adaptive.enabled": "false",
         },
     )
-    if not os.path.exists(os.path.join(table, "_SUCCESS")):
-        materialize_frontier(spark, n, table)
-
-    times = []
-    for rep in range(reps + warm):  # with warm=1, rep 0 is untimed
-        t0 = time.time()
-        full_epoch_from_table(spark, table, batch=batch, seq_bound=n).write.format("noop").mode("overwrite").save()
-        sec = time.time() - t0
-        if rep >= warm:
-            times.append(round(sec, 3))
-        spark.catalog.clearCache()
+    out = engine_epoch_reps(spark, work, frontier_wide_size(n, batch), reps, warm)
+    shutil.rmtree(work)
+    times = [round(s, 3) for s in out["reps"]]
     med = statistics.median(times)
     print(json.dumps({
-        "n": n, "cpus": cpus, "batch": batch, "reps": times,
-        "sec": med, "urls_per_sec": round(n / med),
+        "n": n, "cpus": cpus, "batch": batch, "reps": times, "scheduled": out["scheduled"],
+        "sec": med, "urls_per_sec": round(out["scheduled"] / med),
     }))
     spark.stop()
 

@@ -4,7 +4,7 @@ with the JVM pinned to that many visible CPUs, identical input).
 
 Each parallelism level runs in a FRESH python/JVM process (spark.master
 is fixed per JVM) via scripts/frontier_job.py, which reports the median
-of 3 timed epochs after an untimed warm epoch.
+of 3 timed `CrawlEngine.run_epoch` epochs after an untimed warm epoch.
 
 Usage: python scripts/scaling_bench.py [n_rows] [small_cpus] [big_cpus] [batch]
 """
@@ -24,10 +24,8 @@ def run_once(n: int, cpus: int, batch: int) -> dict:
     launches via `spark-submit --py-files <engine zip>` (the north rule's
     deployment shape); default is a plain python subprocess (same JVM
     semantics in local mode, faster startup)."""
-    # standing frontier table on tmpfs (same rationale as bench.py: the
-    # VM's virtual disk has high-variance throughput; the probe measures
-    # scheduling compute, not disk IO) — materialized once, shared by
-    # both parallelism levels
+    # the frontier store on tmpfs (same rationale as bench.py); each level
+    # builds the same store from the same seed
     tdir = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     job = [os.path.join(REPO, "scripts", "frontier_job.py"), str(n), str(cpus), str(batch),
            f"{tdir}/frontier_bench_{n}"]

@@ -73,7 +73,9 @@ def test_crawl_order_exact_match(sim_result, spark_run):
 
 def test_seen_set_exact_match(sim_result, spark_run):
     store, _ = spark_run
-    spark_seen = {r["seen_key"]: r["first_seen_epoch"] for r in store.read("seen").collect()}
+    seen_rows = store.read("seen").collect()
+    spark_seen = {r["seen_key"]: r["first_seen_epoch"] for r in seen_rows}
+    assert len(seen_rows) == len(spark_seen)  # unique by construction: enqueue_batch relies on it
     assert spark_seen == sim_result.seen
 
 

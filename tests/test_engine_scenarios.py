@@ -170,7 +170,9 @@ def test_robots_exclusion(runs):
 
 def test_seen_set_parity(runs):
     sres, store = runs
-    spark_seen = {r["seen_key"]: r["first_seen_epoch"] for r in store.read("seen").collect()}
+    seen_rows = store.read("seen").collect()
+    spark_seen = {r["seen_key"]: r["first_seen_epoch"] for r in seen_rows}
+    assert len(seen_rows) == len(spark_seen)  # unique by construction: enqueue_batch relies on it
     assert spark_seen == sres.seen
 
 
@@ -248,7 +250,9 @@ def test_bloom_accelerated_engine_identical(spark, runs, tmp_path_factory):
     spark_log = [_key(r) for r in store.read("schedule_log").orderBy("epoch", "pop_index", "url").collect()]
     sim_log = [_key(r) for r in sorted(sres.schedule_log, key=lambda r: (r["epoch"], r["pop_index"], r["url"]))]
     assert spark_log == sim_log
-    spark_seen = {r["seen_key"]: r["first_seen_epoch"] for r in store.read("seen").collect()}
+    seen_rows = store.read("seen").collect()
+    spark_seen = {r["seen_key"]: r["first_seen_epoch"] for r in seen_rows}
+    assert len(seen_rows) == len(spark_seen)  # unique by construction: enqueue_batch relies on it
     assert spark_seen == sres.seen
 
 

@@ -1,5 +1,5 @@
-"""Skew-handling operators: salted two-phase top-k and threshold-based
-global top-k must EXACTLY reproduce the plain-window results on skewed
+"""Skew-handling operators: salted two-phase top-k and the dense global
+sequence must EXACTLY reproduce the plain-window results on skewed
 inputs — they are physical-plan optimizations, not approximations.
 """
 
@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from crawler_spark.operators.skew import global_topk_by_key, salted_topk_per_group
+from crawler_spark.operators.skew import salted_topk_per_group
 
 
 @pytest.fixture(scope="module")
@@ -37,24 +37,6 @@ def test_salted_topk_matches_plain_window(spark, skewed, k, n_salts):
     assert overflow.count() == skewed.count() - len(expected_top)
     # topk ∪ overflow is a partition of the input
     assert topk.count() + overflow.count() == skewed.count()
-
-
-@pytest.mark.parametrize("k", [10, 500, 19_999, 50_000])
-def test_global_topk_exact(spark, skewed, k):
-    keyed = skewed.withColumn("key", F.xxhash64("seq"))  # unique, unordered
-    got = global_topk_by_key(keyed, "key", k, rank_col="rnk").collect()
-    expected = sorted(r["key"] for r in keyed.collect())[:k]
-    assert sorted(r["key"] for r in got) == expected
-    ranks = {r["key"]: r["rnk"] for r in got}
-    for i, key in enumerate(expected):
-        assert ranks[key] == i + 1  # exact dense global ranks
-
-
-def test_global_topk_handles_k_geq_n(spark):
-    df = spark.range(10).select(F.col("id").alias("key"))
-    got = global_topk_by_key(df, "key", 100, rank_col="r").collect()
-    assert len(got) == 10
-    assert sorted((r["key"], r["r"]) for r in got) == [(i, i + 1) for i in range(10)]
 
 
 def test_dense_global_seq_matches_single_window(spark):

@@ -9,7 +9,9 @@ from __future__ import annotations
 import json
 import os
 
-from crawler_spark.storage.snapshots import SnapshotStore
+import pytest
+
+from crawler_spark.storage.snapshots import CommitConflict, SnapshotStore
 
 
 def test_commit_replace_append_carry_forward(spark, tmp_path):
@@ -53,6 +55,33 @@ def test_manifest_promotion_is_atomic_rename(spark, tmp_path):
         m = json.load(fh)
     assert m["meta"]["next_seq"] == 5
     assert store.snapshot().meta["next_seq"] == 5
+
+
+def test_stale_commit_raises_conflict_and_keeps_winner(spark, tmp_path):
+    """A commit planned from snapshot v0 that reaches promotion after
+    another committer already published v1 raises CommitConflict; the
+    winner's manifest stays byte-identical and no .tmp is left behind."""
+    root = str(tmp_path)
+    winner, loser = SnapshotStore(spark, root), SnapshotStore(spark, root)
+    winner.commit(epoch=0, replace={"t": spark.createDataFrame([(1,)], "x long")})
+    write_data = loser._write_data
+    v1 = os.path.join(root, "manifests", "v00000001.json")
+    won = {}
+
+    def write_then_lose_race(table, df):
+        # the loser has read v0 and is writing its data: the winner commits v1
+        winner.commit(epoch=1, replace={"t": spark.createDataFrame([(2,)], "x long")})
+        with open(v1, "rb") as fh:
+            won["manifest"] = fh.read()
+        return write_data(table, df)
+
+    loser._write_data = write_then_lose_race
+    with pytest.raises(CommitConflict):
+        loser.commit(epoch=1, replace={"t": spark.createDataFrame([(3,)], "x long")})
+    assert sorted(os.listdir(os.path.join(root, "manifests"))) == ["v00000000.json", "v00000001.json"]
+    with open(v1, "rb") as fh:
+        assert fh.read() == won["manifest"]
+    assert [r["x"] for r in loser.read("t").collect()] == [2]
 
 
 def test_engine_runs_transparently_over_chunked_store(spark, tmp_path):
