@@ -9,8 +9,9 @@ Headline composition:
   store at SPARK_GRAFT_FRONTIER_N frontier rows (default 2M), built
   untimed (`engine_epoch_reps`). frontier_urls_per_sec = scheduled URLs /
   epoch seconds, perfbench's `urls_per_s`.
-* seen_bloom — partitioned bloom build over 1M seen keys + probe of 2M
-  candidates with exact verify (operators/seenset.py).
+* seen_bloom — the engine's seen-membership operator (seenset.flag_seen):
+  partitioned bloom build over 1M string seen keys + probe of 2M
+  candidates with exact verify on the string key, unseen rows kept.
 * a representative slice of __spark_entry__ queries at the sf tables.
 
 Every query except the epoch is executed with a noop write (full
@@ -99,17 +100,19 @@ def engine_epoch_reps(spark, work_dir: str, size: dict, reps: int, warm: int = 1
 
 
 def seen_bloom_job(spark):
-    from crawler_spark.operators.seenset import build_filters, filtered_anti_join
+    from crawler_spark.operators.seenset import build_filters, flag_seen
 
-    seen = spark.range(1_000_000).select(
-        F.xxhash64(F.col("id"), F.lit(1)).alias("seen_hash")
+    def key(ids):
+        return F.concat(F.lit("npm@u"), ids.cast("string"))
+
+    seen = spark.range(1_000_000).select(key(F.col("id")).alias("seen_key")).select(
+        "seen_key", F.xxhash64("seen_key").alias("seen_hash")
     )
     cands = spark.range(2_000_000).select(
-        F.xxhash64((F.col("id") % 1_500_000), F.lit(1)).alias("url_hash"),
-        F.col("id").alias("cand_id"),
-    )
+        key(F.col("id") % 1_500_000).alias("_skey"), F.col("id").alias("cand_id")
+    ).withColumn("url_hash", F.xxhash64("_skey"))
     filters = build_filters(seen, n_partitions=64)
-    return filtered_anti_join(cands, seen, filters, n_partitions=64)
+    return flag_seen(cands, seen, filters, n_partitions=64).filter(F.col("_ex").isNull())
 
 
 def main():

@@ -8,9 +8,9 @@ both on the crawl ``documents`` table and on the driver's testdata.
 
 Scale design notes (per operator):
 
-* exact:   one groupBy on a 256-bit content hash — map-side partial agg,
-           single shuffle keyed on the hash (uniformly distributed, no
-           skew by construction).
+* exact:   not here — textstats.fingerprint (md5 of the normalized
+           token stream) is the exact-content key; q_dedup_fingerprint
+           groups on it.
 * n-gram Jaccard: explode(distinct shingles) self-join. The classic
            quadratic blowup is bounded by dropping ultra-common shingles
            (`max_shingle_freq`, a stop-shingle filter) — the same trick
@@ -25,7 +25,7 @@ Scale design notes (per operator):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -160,38 +160,6 @@ def dedup_documents(
             (F.col("doc_id") == F.col("rep_id")).alias("is_representative"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# exact dedup
-# ---------------------------------------------------------------------------
-
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact-content duplicate groups: sha256 over the raw text.
-
-    Returns (content_hash, n_members, representative_id=min id, member_ids
-    sorted) for groups with >1 member. One hash-keyed shuffle; partial
-    count/min happen map-side.
-    """
-    h = F.sha2(F.col(text_col).cast("string"), 256)
-    return (
-        df.select(h.alias("content_hash"), F.col(id_col).alias("id"))
-        .groupBy("content_hash")
-        .agg(
-            F.count("*").alias("n_members"),
-            F.min("id").alias("representative_id"),
-            F.array_sort(F.collect_list("id")).alias("member_ids"),
-        )
-        .filter(F.col("n_members") > 1)
-    )
-
-
-def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one row per distinct content (min id wins — deterministic)."""
-    h = F.sha2(F.col(text_col).cast("string"), 256)
-    w = Window.partitionBy(h).orderBy(F.col(id_col))
-    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
 
 
 # ---------------------------------------------------------------------------

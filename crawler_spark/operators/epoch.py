@@ -25,12 +25,13 @@ DataFrame DAG committed atomically to the snapshot store:
    `documents`.
 6. **expansion** — processed rows ⨝ broadcast(visitor_map) → children,
    canonicalized + hashed, deduped within the batch ('Attenuated',
-   attenuatedQueue.js:36-69), anti-joined against the seen set
-   (request.js:117-121, 247-251), inserted with deterministic
-   `enqueued_seq` derived from (pop_index, edge_idx) — never
+   attenuatedQueue.js:36-69), checked against the seen set
+   (seenset.flag_seen; request.js:117-121, 247-251), inserted with
+   deterministic `enqueued_seq` derived from (pop_index, edge_idx) — never
    `monotonically_increasing_id` (SURVEY.md §4).
 7. **commit** — one atomic snapshot replacing {frontier, seen} and
-   appending {documents, schedule_log, deadletters, epoch_metrics}.
+   appending {documents, schedule_log, deadletters, epoch_metrics,
+   epoch_host_metrics, harvest_events}.
 
 Scale notes: enqueued_seq assignment over the epoch's *new* rows uses a
 range-partitioned two-phase dense rank (skew.py::dense_global_seq — no
@@ -70,6 +71,7 @@ from crawler_spark.data.visitor_map import (
 )
 from crawler_spark.functions.coordinates import host_for_provider, to_url, to_urn, with_parsed_coordinates
 from crawler_spark.functions.versions import latest_version_agg
+from crawler_spark.operators.seenset import flag_seen
 from crawler_spark.poporder import epoch_rng, pop_schedule
 from crawler_spark.storage.snapshots import SnapshotStore
 
@@ -143,13 +145,11 @@ def enqueue_batch(
     the caller unpersists each of `cached_nodes` after committing so the
     write path reuses the selection. Mirrors CrawlSimulator.enqueue_batch.
 
-    When `seen_filters` is given (per-partition bloom/cuckoo states from
-    seenset.build_filters), the seen anti-join is bloom-accelerated:
-    definite-unseen candidates skip the join entirely; only bloom-positive
-    suspects verify against the exact seen table — and the verify joins on
-    the full STRING key, so 64-bit hash collisions cannot false-drop a URL
-    (exactness per the north rule). Result is identical to the plain
-    anti-join; only the physical plan changes.
+    Seen membership is seenset.flag_seen: with `seen_filters`
+    (per-partition bloom/cuckoo states from seenset.build_filters over
+    `n_filter_parts` partitions) it is bloom-accelerated, verifying
+    suspects on the full string key. Result is identical to the plain
+    join; only the physical plan changes.
     """
     okey = [F.col(c) for c in order_cols]
     # attenuation key includes the policy short form, matching the
@@ -187,41 +187,8 @@ def enqueue_batch(
     fresh2 = fresh.withColumn("_skey", skey).withColumn(
         "_krank", F.row_number().over(w_key)
     )
-    # `seen` is unique on seen_key by construction (every writer adds only
-    # absent keys with _krank == 1; ops only removes keys), so the left
-    # join needs no distinct — and no extra shuffle of the whole seen set
-    seen_flags = seen.select(F.col("seen_key").alias("_skey"), F.lit(True).alias("_ex"))
-    if seen_filters is not None:
-        from crawler_spark.operators.seenset import probe_candidates
-
-        if n_filter_parts <= 0:
-            # pmod(hash, 0) is NULL row-wise (or a DIVIDE_BY_ZERO under
-            # ANSI): every candidate would land in a filterless cogroup,
-            # read as definitely-unseen, and every already-seen URL would
-            # re-enqueue. Fail loudly instead of silently disabling the
-            # seen set.
-            raise ValueError(
-                "seen_filters requires n_filter_parts > 0 (the partition "
-                "count build_filters was called with)"
-            )
-        # url_hash IS xxhash64('type@url') == seen_hash, so it probes the
-        # same key space the filters were built over; bloom-negative rows
-        # are definitely unseen, suspects verify on the exact string key.
-        # Materialized once (non-eager localCheckpoint): both the suspect
-        # and definitely-unseen branches below consume `probed` — without
-        # it the filter cogroup probe executes once per branch inside the
-        # single epoch action (the same diamond seenset.filtered_anti_join
-        # closes the same way; the cache boundary on `flagged` sits ABOVE
-        # the union, too late to stop the double probe).
-        probed = probe_candidates(
-            fresh2, seen_filters, "url_hash", n_filter_parts
-        ).localCheckpoint(eager=False)
-        verified = probed.filter(F.col("maybe_seen")).join(seen_flags, "_skey", "left")
-        flagged = probed.filter(~F.col("maybe_seen")).withColumn(
-            "_ex", F.lit(None).cast("boolean")
-        ).unionByName(verified).drop("maybe_seen")
-    else:
-        flagged = fresh2.join(seen_flags, "_skey", "left")
+    # `_ex`: True iff `_skey` is already in `seen`, else NULL
+    flagged = flag_seen(fresh2, seen, seen_filters, n_filter_parts)
     flagged = flagged.cache()
     known = F.coalesce(F.col("_ex"), F.lit(False)) | (F.col("_krank") > 1)
     unseen = flagged.filter(is_reprocess | ~known)
@@ -296,7 +263,6 @@ class CrawlEngine:
         n_filter_parts: int = 16,
         policies: dict[str, tuple[str, str | int]] | None = None,
         processor_versions: dict[str, int] | None = None,
-        fetch_cache_ttl: int = FETCH_CACHE_TTL_EPOCHS,
         tags: DataFrame | None = None,
     ):
         self.spark = spark
@@ -324,7 +290,6 @@ class CrawlEngine:
         # kind='days' with the horizon in f_n (epoch units).
         self.policies = {**NAMED_POLICIES, **(policies or {})}
         self.processor_versions = {**DEFAULT_PROCESSOR_VERSIONS, **(processor_versions or {})}
-        self.fetch_cache_ttl = fetch_cache_ttl
         self.policy_dim = spark.createDataFrame(
             [
                 (root, fam, "days" if isinstance(fresh, int) else fresh,
@@ -739,7 +704,7 @@ class CrawlEngine:
             F.col("_d.release_date").alias("_stored_release_date"),
         )
         cur_version = self._cur_version_col()
-        ttl = F.lit(self.fetch_cache_ttl)
+        ttl = F.lit(FETCH_CACHE_TTL_EPOCHS)
         traversable = F.col("type").isin(*TRAVERSABLE_TYPES)
 
         # ---- fetchable (concrete package types) --------------------------

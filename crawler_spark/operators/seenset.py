@@ -330,63 +330,69 @@ def probe_candidates(
     return probed.select(*cand_cols, "maybe_seen")
 
 
-def filtered_anti_join(
+def flag_seen(
     candidates: DataFrame,
     seen: DataFrame,
-    filters: DataFrame,
-    cand_key: str = "url_hash",
-    seen_key: str = "seen_hash",
-    n_partitions: int = 32,
-    verify_keys: tuple[str, str] | None = None,
+    filters: DataFrame | None = None,
+    n_partitions: int = 0,
 ) -> DataFrame:
-    """EXACT unseen-candidates set, bloom-accelerated (SURVEY.md §2.1 S3).
+    """The URL-seen membership test (SURVEY.md §2.1 S3): `candidates` plus
+    `_ex`, True iff the candidate's `_skey` ('type@url') is a `seen_key`
+    of `seen`, else NULL. Exact on the full string key, so a 64-bit hash
+    collision can never drop an unseen URL (north rule).
 
-    Exactness is relative to the VERIFY key: by default suspects
-    anti-join on the same 64-bit hash the filters probe, which is exact
-    when the hash IS the caller's identity (as in bench's synthetic
-    seen-set job) but would false-drop a colliding URL when the semantic
-    key is wider. Callers whose identity is a string key pass
-    `verify_keys=(cand_col, seen_col)` so suspects verify on the full
-    key — the engine's enqueue path does exactly this inline
-    (epoch.py enqueue_batch verifies on the 'type@url' string), so a
-    64-bit collision can never drop an unseen URL (north rule).
+    `seen` must be unique on `seen_key` (every writer adds only absent
+    keys), so the left join keeps one row per candidate without a
+    distinct — and without an extra shuffle of the whole seen set.
 
-    The plan:
+    Without `filters` this is a plain left join of `_skey` against
+    `seen_key`. With `filters` (per-partition states from build_filters,
+    over `n_partitions` hash partitions of `seen_hash`) it is
+    bloom-accelerated:
 
-    1. probe: candidates whose partition bloom says 'definitely unseen'
-       pass through with NO join (the overwhelming majority at steady
-       state — a frontier epoch mostly discovers fresh URLs);
-    2. verify: only bloom-positive candidates (true hits + ~fpp false
-       positives) anti-join the exact seen table.
+    1. probe: candidates' `url_hash` (== xxhash64('type@url') ==
+       `seen_hash`, the key space the filters were built over) against
+       their partition's bloom; bloom-negative rows are definitely unseen
+       and pass through with `_ex` NULL and NO join (the overwhelming
+       majority at steady state);
+    2. verify: only bloom-positive suspects (true hits + ~fpp false
+       positives) join the exact seen table on the string key.
 
-    The anti-join's probe side shrinks from |candidates| to
-    |hits|·(1+fpp) — at 10^10 seen keys the exact table is huge, but the
-    join now only shuffles the small maybe-seen slice against it.
+    The result is identical to the plain join; only the physical plan
+    changes — the join's probe side shrinks from |candidates| to
+    |hits|·(1+fpp).
 
     `probed` is materialized once (non-eager localCheckpoint) because both
-    output branches consume it: without it the whole filter-build + cogroup
-    probe executes twice in one action. localCheckpoint rather than persist
-    on purpose: a catalog persist registers a CacheManager entry that only
-    an explicit unpersist/clearCache releases — a per-epoch caller would
-    accumulate one leaked entry per epoch. localCheckpoint blocks live at
-    the RDD layer and the ContextCleaner drops them once the returned
-    DataFrame is garbage-collected (asynchronously — driver GC plus the
-    cleaner thread; a timing-sensitive caller can force it, see
-    bench.release_caches), so repeated calls are self-cleaning rather
-    than unbounded.
-    The materialized set is one epoch's candidate batch plus a boolean —
-    bounded by batch size, not by the seen set — so it spills safely at
-    scale. (Cluster caveat: localCheckpoint blocks are not recomputable
-    after executor loss; under dynamic allocation prefer a caller-managed
-    persist + unpersist-after-action instead.)
+    branches consume it: without it the filter cogroup probe executes once
+    per branch inside the single epoch action. localCheckpoint rather than
+    persist on purpose: a catalog persist registers a CacheManager entry
+    that only an explicit unpersist releases, so a per-epoch caller would
+    leak one entry per epoch; localCheckpoint blocks live at the RDD layer
+    and the ContextCleaner drops them once the returned DataFrame is
+    garbage-collected. The materialized set is one epoch's candidate batch
+    plus a boolean — bounded by batch size, not by the seen set. (Cluster
+    caveat: localCheckpoint blocks are not recomputable after executor
+    loss; under dynamic allocation prefer a caller-managed persist.)
     """
-    probed = probe_candidates(candidates, filters, cand_key, n_partitions).localCheckpoint(
+    seen_flags = seen.select(F.col("seen_key").alias("_skey"), F.lit(True).alias("_ex"))
+    if filters is None:
+        return candidates.join(seen_flags, "_skey", "left")
+    if n_partitions <= 0:
+        # pmod(hash, 0) is NULL row-wise (or a DIVIDE_BY_ZERO under
+        # ANSI): every candidate would land in a filterless cogroup, read
+        # as definitely-unseen, and every already-seen URL would
+        # re-enqueue. Fail loudly instead of silently disabling the seen set.
+        raise ValueError(
+            "seen filters require n_partitions > 0 (enqueue_batch's "
+            "n_filter_parts: the partition count build_filters was called with)"
+        )
+    probed = probe_candidates(candidates, filters, "url_hash", n_partitions).localCheckpoint(
         eager=False
     )
-    fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspect = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    cv, sv = verify_keys if verify_keys is not None else (cand_key, seen_key)
-    verified = suspect.join(
-        seen.select(F.col(sv).alias(cv)).distinct(), cv, "left_anti"
+    verified = probed.filter(F.col("maybe_seen")).join(seen_flags, "_skey", "left")
+    return (
+        probed.filter(~F.col("maybe_seen"))
+        .withColumn("_ex", F.lit(None).cast("boolean"))
+        .unionByName(verified)
+        .drop("maybe_seen")
     )
-    return fresh.unionByName(verified)

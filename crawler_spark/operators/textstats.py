@@ -28,13 +28,6 @@ def token_count(text: Column) -> Column:
     return F.size(F.filter(F.split(text, r"\s+"), lambda t: t != ""))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token estimate: count of maximal runs of word chars,
-    digits, or single punctuation marks — the regex analogue of a
-    byte-pair tokenizer's pre-tokenization split (GPT-2 style pattern)."""
-    return F.size(F.regexp_extract_all(text, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0))
-
-
 def stopword_hits(text: Column, lang: str) -> Column:
     words = STOPWORDS[lang]
     return F.size(F.filter(tokens(text), lambda t: t.isin(*words)))
@@ -140,13 +133,3 @@ def winnowing_fingerprints(
     ).otherwise(kh)  # short docs: keep all k-gram hashes
     return kdf.select("id", F.array_sort(F.array_distinct(mins)).alias("fingerprints"))
 
-
-def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One-stop per-document profile: lang + tokens + quality + fingerprint."""
-    q = quality_features(df, id_col, text_col)
-    extras = df.select(
-        F.col(id_col).alias("id"),
-        lang_id(F.col(text_col)).alias("lang_pred"),
-        fingerprint(F.col(text_col)).alias("fingerprint"),
-    )
-    return q.join(extras, "id")

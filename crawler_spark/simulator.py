@@ -180,7 +180,6 @@ class CrawlSimulator:
         rng_seed: int | None = None,
         policies: dict[str, tuple[str, str | int]] | None = None,
         processor_versions: dict[str, int] | None = None,
-        fetch_cache_ttl: int = FETCH_CACHE_TTL_EPOCHS,
         tags_rows: list[dict] | None = None,
     ):
         self.tags_rows = tags_rows
@@ -194,7 +193,6 @@ class CrawlSimulator:
         # N-epoch freshness axis)
         self.policies = {**NAMED_POLICIES, **(policies or {})}
         self.processor_versions = {**DEFAULT_PROCESSOR_VERSIONS, **(processor_versions or {})}
-        self.fetch_cache_ttl = fetch_cache_ttl
         self.edges_by_parent: dict[str, list[dict]] = {}
         for e in visitor_edges_py():
             self.edges_by_parent.setdefault(e["parent_type"], []).append(e)
@@ -429,7 +427,7 @@ class CrawlSimulator:
         storage_allowed = family != "originOnly"
         storage_rules = family in ("storageOnly", "storageOriginIfMissing")
         storage_only = family == "storageOnly"
-        ttl = self.fetch_cache_ttl
+        ttl = FETCH_CACHE_TTL_EPOCHS
 
         if rtype in FETCHABLE_TYPES:
             rows = self.registry.get((c["provider"], c["namespace"], c["name"]))

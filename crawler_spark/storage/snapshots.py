@@ -161,15 +161,8 @@ class SnapshotStore:
         # constructor flag: a store written chunked reads back reassembled
         # even from a reader constructed without the flag (and vice
         # versa), so a flag mismatch cannot return chunk rows as if they
-        # were documents. Manifests written before representation
-        # recording fall back to the constructor flag (old behavior).
-        rec = snap.meta.get("chunked")
-        if rec is None:
-            if table in self.chunk_tables:
-                return self._from_chunks(
-                    raw, self.chunk_tables[table].get("spans_col", "spans")
-                )
-            return raw
+        # were documents.
+        rec = snap.meta["chunked"]
         if table in rec:
             return self._from_chunks(raw, rec[table]["spans_col"])
         return raw
@@ -200,11 +193,8 @@ class SnapshotStore:
         # Per-table storage representation, recorded in the manifest so
         # reads are self-describing and appends cannot mix chunked and
         # plain parquet dirs under one table (which would silently
-        # corrupt reassembly). Manifests from before this record existed
-        # return None; their tables are assumed to match the current
-        # constructor intent (the only readers they ever had).
-        prev_chunked = prev.meta.get("chunked") if prev else None
-        chunked: dict[str, dict] = dict(prev_chunked or {})
+        # corrupt reassembly).
+        chunked: dict[str, dict] = dict(prev.meta["chunked"]) if prev else {}
 
         def _intent(t: str) -> dict | None:
             if t in self.chunk_tables:
@@ -221,10 +211,7 @@ class SnapshotStore:
         for t, df in (append or {}).items():
             if tables.get(t):
                 # `chunked` already reflects a same-commit replace of t
-                if t in (replace or {}) or prev_chunked is not None:
-                    was = t in chunked
-                else:
-                    was = t in self.chunk_tables
+                was = t in chunked
                 if was != (t in self.chunk_tables):
                     raise ValueError(
                         f"table {t!r} holds {'chunked' if was else 'plain'} parquet dirs "
@@ -234,7 +221,7 @@ class SnapshotStore:
                     )
             rec = _intent(t)
             if rec is not None:
-                chunked[t] = rec  # also upgrades pre-record manifests
+                chunked[t] = rec
             tables[t] = tables.get(t, []) + [self._write_data(t, df)]
         version = (prev.version + 1) if prev else 0
         manifest = {

@@ -1,11 +1,16 @@
-"""Ad-hoc parity check: Spark engine vs pure-Python reference simulator.
+"""Ad-hoc parity check: Spark engine vs pure-Python reference simulator,
+judged by the benchmark's parity gate (schedule log, seen set, latest
+documents).
 
 Usage: python scripts/parity_check.py [n_names n_seeds host_budget batch_budget]
 """
 
+import os
 import sys
 import tempfile
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from crawler_spark.data.generators import (
     gen_registry_py,
@@ -19,6 +24,7 @@ from crawler_spark.operators.epoch import CrawlEngine
 from crawler_spark.session import get_spark
 from crawler_spark.simulator import CrawlSimulator
 from crawler_spark.storage.snapshots import SnapshotStore
+from perfbench.gate import engine_state, parity_violations
 
 
 def main() -> int:
@@ -43,55 +49,10 @@ def main() -> int:
     metrics = eng.run(seeds_df(spark, seed_rows), max_epochs=80)
     print("spark done", round(time.time() - t0, 1), "s, epochs", len(metrics))
 
-    log = store.read("schedule_log").orderBy("epoch", "pop_index").collect()
-    simlog = sorted(sres.schedule_log, key=lambda r: (r["epoch"], r["pop_index"]))
-    mismatch = 0
-    for a, b in zip(simlog, log):
-        ta = (a["epoch"], a["pop_index"], a["type"], a["url"], a["queue"], a["scope"], a["outcome"], a["attempt"])
-        tb = (b["epoch"], b["pop_index"], b["type"], b["url"], b["queue"], b["scope"], b["outcome"], b["attempt"])
-        if ta != tb:
-            mismatch += 1
-            if mismatch < 8:
-                print("SIM:", ta, "\nSPK:", tb)
-    print("log rows", len(simlog), len(log), "mismatches", mismatch)
-    seen_spark = {r["seen_key"]: r["first_seen_epoch"] for r in store.read("seen").collect()}
-    print("seen match:", seen_spark == sres.seen, len(seen_spark), len(sres.seen))
-    if seen_spark != sres.seen:
-        extra = set(seen_spark) - set(sres.seen)
-        missing = set(sres.seen) - set(seen_spark)
-        print("  extra in spark:", list(extra)[:5], "missing:", list(missing)[:5])
-        both = {k for k in seen_spark if k in sres.seen and seen_spark[k] != sres.seen[k]}
-        print("  epoch diff:", [(k, seen_spark[k], sres.seen[k]) for k in list(both)[:5]])
-    # documents is an append log — the newest epoch's row is the doc's
-    # current state (matches the engine's max_by read); compare spans AND
-    # the _metadata stamps (etag / fetchedAt / processedAt / version)
-    latest: dict = {}
-    for r in store.read("documents").collect():
-        if r["doc_id"] not in latest or r["epoch"] > latest[r["doc_id"]]["epoch"]:
-            latest[r["doc_id"]] = r
-    docs_spark = {
-        k: {
-            "spans": [s.asDict() for s in r["spans"]],
-            "etag": r["etag"],
-            "fetched_at": r["fetched_at_epoch"],
-            "processed_at": r["processed_at_epoch"],
-            "version": r["version"],
-            "release_date": r["release_date"],
-        }
-        for k, r in latest.items()
-    }
-    print("docs match:", docs_spark == sres.documents, len(docs_spark), len(sres.documents))
-    if docs_spark != sres.documents:
-        for k in list(set(docs_spark) ^ set(sres.documents))[:5]:
-            print("  only-one-side doc:", k)
-        for k in docs_spark:
-            if k in sres.documents and docs_spark[k] != sres.documents[k]:
-                print("  diff doc:", k, "\n   SPK:", docs_spark[k], "\n   SIM:", sres.documents[k])
-                break
-    ok = (
-        mismatch == 0 and len(simlog) == len(log)
-        and seen_spark == sres.seen and docs_spark == sres.documents
-    )
+    violations = parity_violations(engine_state(store), sres)
+    for v in violations:
+        print(v)
+    ok = not violations
     print("PARITY:", "OK" if ok else "FAIL")
     spark.stop()
     return 0 if ok else 1

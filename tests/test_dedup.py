@@ -1,4 +1,4 @@
-"""Deduplication operator tests: exact, n-gram Jaccard, MinHash+LSH,
+"""Deduplication operator tests: n-gram Jaccard, MinHash+LSH,
 SimHash — validated against brute-force Python oracles on small corpora.
 """
 
@@ -8,11 +8,8 @@ import itertools
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from crawler_spark.operators.dedup import (
-    dedup_exact,
-    exact_duplicates,
     lsh_candidate_pairs,
     minhash_near_duplicates,
     minhash_signatures,
@@ -51,18 +48,6 @@ def _py_jaccard(a, b, n=3):
 @pytest.fixture(scope="module")
 def docs_df(spark):
     return spark.createDataFrame(DOCS, "id long, text string")
-
-
-def test_exact_duplicates(docs_df):
-    groups = exact_duplicates(docs_df, "id", "text").collect()
-    assert len(groups) == 1
-    g = groups[0]
-    assert g["member_ids"] == [1, 2] and g["representative_id"] == 1
-
-
-def test_dedup_exact_keeps_min_id(docs_df):
-    kept = {r["id"] for r in dedup_exact(docs_df, "id", "text").collect()}
-    assert kept == {1, 3, 4, 5, 6, 7}
 
 
 def test_ngram_jaccard_matches_python_oracle(docs_df):
@@ -131,16 +116,6 @@ def test_simhash_properties(docs_df):
     near = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_near_duplicates(docs_df, "id", "text", max_hamming=3).collect()}
     assert near[(1, 2)] == 0 and near[(4, 5)] == 0
     assert all(h <= 3 for h in near.values())
-
-
-def test_dedup_on_testdata_documents(spark, sf_dir):
-    # smoke at driver-table scale: pipeline runs and is self-consistent
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    dups = exact_duplicates(docs, "doc_id", "text")
-    n_docs = docs.count()
-    n_after = dedup_exact(docs, "doc_id", "text").count()
-    n_dup_members = dups.agg(F.coalesce(F.sum(F.col("n_members") - 1), F.lit(0))).collect()[0][0]
-    assert n_after == n_docs - n_dup_members
 
 
 def test_prefix_jaccard_equals_allpairs(spark):

@@ -1,7 +1,8 @@
 """Seen-set membership structures (SURVEY.md M3 / north rule): partitioned
-Bloom filters, cuckoo sidecar with deletions, and the exact bloom-accelerated
-anti-join. Properties: ZERO false negatives (hard invariant), measured FPR
-below target, deletion support, exactness of the composed filter+verify.
+Bloom filters, cuckoo sidecar with deletions, and the exact membership test
+the engine runs (plain and bloom-accelerated). Properties: ZERO false
+negatives (hard invariant), measured FPR below target, deletion support,
+exactness of the composed filter+verify.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from crawler_spark.operators.seenset import (
     bloom_params,
     bloom_probe,
     build_filters,
-    filtered_anti_join,
+    flag_seen,
     probe_candidates,
 )
 
@@ -100,14 +101,19 @@ def test_probe_cuckoo_path(spark, filters, seen_df):
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_filtered_anti_join_is_exact(spark, filters, seen_df):
+def test_flag_seen_is_exact(spark, filters, seen_df):
+    """Plain and bloom-accelerated paths flag exactly the seen candidates."""
     seen_keys = {r["seen_hash"] for r in seen_df.collect()}
+    seen = seen_df.select("seen_hash", F.concat(F.lit("k@"), F.col("seen_hash")).alias("seen_key"))
     mixed = list(seen_keys)[:1500] + [int(np.int64(k)) for k in UNSEEN[:1500]]
-    cand = spark.createDataFrame([(k, f"u{k}") for k in mixed], "url_hash long, url string")
-    out = filtered_anti_join(cand, seen_df, filters, n_partitions=8)
-    got = {r["url_hash"] for r in out.collect()}
+    cand = spark.createDataFrame([(k, f"k@{k}") for k in mixed], "url_hash long, _skey string")
     expected = {k for k in mixed if k not in seen_keys}
-    assert got == expected  # exact: no FP survives, no FN dropped
+    for flt, parts in ((None, 0), (filters, 8)):
+        out = flag_seen(cand, seen, flt, parts)
+        rows = out.collect()
+        assert len(rows) == len(mixed)  # one row per candidate
+        got = {r["url_hash"] for r in rows if r["_ex"] is None}
+        assert got == expected  # exact: no FP survives, no FN dropped
 
 
 def test_empty_partition_candidates_pass_through(spark, seen_df):
@@ -143,28 +149,21 @@ def test_cuckoo_overflowed_partition_degrades_to_maybe_seen(spark, filters, seen
     assert any(not r["maybe_seen"] for r in others)
 
 
-def test_filtered_anti_join_verify_keys_full_key(spark):
-    """verify_keys verifies suspects on the FULL string key, so a 64-bit
-    hash collision between a candidate and a DIFFERENT seen URL cannot
-    false-drop the candidate (the engine-path semantics, made available
-    to the generic operator)."""
+def test_flag_seen_collision_cannot_drop_unseen_key(spark):
+    """Suspects verify on the FULL string key, so a 64-bit hash collision
+    between a candidate and a DIFFERENT seen URL cannot drop the unseen
+    candidate (north rule)."""
     # two distinct urls forced onto one hash value (synthetic collision)
     seen = spark.createDataFrame(
         [(42, "type@url-seen")], "seen_hash long, seen_key string"
     )
     cand = spark.createDataFrame(
         [(42, "type@url-other"), (42, "type@url-seen"), (7, "type@url-fresh")],
-        "url_hash long, cand_key string",
+        "url_hash long, _skey string",
     )
     filters = build_filters(seen, n_partitions=4)
-    # hash-keyed verify (default): the colliding unseen url is dropped —
-    # exact only relative to the hash
-    by_hash = filtered_anti_join(cand, seen, filters, n_partitions=4)
-    assert {r["cand_key"] for r in by_hash.collect()} == {"type@url-fresh"}
-    # full-key verify: the collision survives, only the true dup drops
-    by_key = filtered_anti_join(
-        cand, seen, filters, n_partitions=4, verify_keys=("cand_key", "seen_key")
-    )
-    assert {r["cand_key"] for r in by_key.collect()} == {
+    out = flag_seen(cand, seen, filters, n_partitions=4)
+    # the collision survives, only the true dup is flagged
+    assert {r["_skey"] for r in out.filter(F.col("_ex").isNull()).collect()} == {
         "type@url-fresh", "type@url-other",
     }

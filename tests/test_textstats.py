@@ -13,7 +13,6 @@ from crawler_spark.operators.textstats import (
     fingerprint,
     lang_id,
     quality_features,
-    text_profile,
     token_count,
     winnowing_fingerprints,
 )
@@ -85,13 +84,10 @@ def test_winnowing_fingerprints_properties(spark):
     assert 0 < len(got[1]) < len(base)
 
 
-def test_text_profile_on_testdata(spark, sf_dir):
+def test_quality_features_on_testdata(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    prof = text_profile(docs, "doc_id", "text")
-    n = docs.count()
-    assert prof.count() == n
-    cols = set(prof.columns)
-    assert {"id", "n_tokens", "quality_score", "lang_pred", "fingerprint"} <= cols
+    prof = quality_features(docs, "doc_id", "text")
+    assert prof.count() == docs.count()
     # n_chars agrees with the table's own n_chars column
     joined = prof.join(
         docs.select(F.col("doc_id").alias("id"), F.col("n_chars").alias("n_chars_ref")), "id"
