@@ -146,7 +146,7 @@ def enqueue_batch(
     write path reuses the selection. Mirrors CrawlSimulator.enqueue_batch.
 
     Seen membership is seenset.flag_seen: with `seen_filters`
-    (per-partition bloom/cuckoo states from seenset.build_filters over
+    (per-partition bloom states from seenset.build_filters over
     `n_filter_parts` partitions) it is bloom-accelerated, verifying
     suspects on the full string key. Result is identical to the plain
     join; only the physical plan changes.
@@ -270,7 +270,7 @@ class CrawlEngine:
         self.host_budget = host_budget
         self.batch_budget = batch_budget
         self.rng_seed = rng_seed
-        # bloom/cuckoo-accelerated seen membership (M3): identical results,
+        # bloom-accelerated seen membership (M3): identical results,
         # smaller anti-join probe side — the 10^10-scale path
         self.use_seen_filters = use_seen_filters
         self.n_filter_parts = n_filter_parts

@@ -5,8 +5,8 @@ columns with typed metadata, processed through Arrow-batched
 This extends the reference's attachment model — media blobs stored by
 sha256 token next to the document (/root/reference/providers/process/
 abstractProcessor.js:97-113, providers/store/attachmentStore.js:16-41) —
-into the operations a training-data pipeline needs at 100 TB: decode,
-feature-extract, resize, frame-sample.
+into the operations a training-data pipeline needs at 100 TB: decode and
+feature-extract.
 
 The decode kernels themselves are STUBBED (image/audio codecs are not in
 this container): ``decode_fn='fake'`` produces deterministic pseudo
@@ -136,40 +136,3 @@ def decode_media(df: DataFrame, decode_fn: str = "fake") -> DataFrame:
     from crawler_spark.operators.skew import spread_small_input
 
     return spread_small_input(df).mapInPandas(gen, DECODED_SCHEMA)
-
-
-def resize_plan(decoded: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize geometry (pure column math — the actual pixel resample lives
-    in the decode kernel): scale = max_side / max(w, h), clamped to 1."""
-    scale = F.least(F.lit(1.0), F.lit(max_side) / F.greatest("width", "height"))
-    return decoded.select(
-        "media_ref",
-        "width",
-        "height",
-        F.round(scale, 6).alias("scale"),
-        F.ceil(F.col("width") * scale).cast("int").alias("out_width"),
-        F.ceil(F.col("height") * scale).cast("int").alias("out_height"),
-    )
-
-
-def sample_frames(decoded: DataFrame, every_n: int = 30, max_frames: int = 8) -> DataFrame:
-    """Frame-sampling plan for videos: frame indices 0, n, 2n, … capped at
-    max_frames — one output row per sampled frame (explode of a sequence;
-    no Python)."""
-    idx = F.slice(
-        F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n)),
-        1,
-        max_frames,
-    )
-    return (
-        decoded.filter(F.col("media_type") == "video")
-        .select("media_ref", "n_frames", F.posexplode(idx).alias("sample_idx", "frame_idx"))
-    )
-
-
-def media_feature_table(documents: DataFrame) -> DataFrame:
-    """documents → media → decode → (media_ref, feature) — the embedding
-    source for similarity search over media (operators/similarity.py)."""
-    return decode_media(media_from_documents(documents)).select(
-        "media_ref", "media_type", "feature"
-    )

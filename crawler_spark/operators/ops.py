@@ -1,16 +1,16 @@
 """Queue operations API — the Spark twins of the reference's REST ops
-(/root/reference/ghcrawler/lib/crawlerService.js:75-135): queue info,
-flush, and deadletter requeue.
+(ghcrawler/lib/crawlerService.js:75-135): queue info, flush, and
+deadletter requeue.
 
 Deadletter requeue is the operation that justifies the cuckoo sidecar
 (north rule: "cuckoo-filter sidecar for deletions"): re-crawling a
 deadlettered URL requires REMOVING its key from the URL-seen set. The
 exact seen table handles that with an anti-join; the per-partition
-Bloom filters cannot delete — but the cuckoo filters can, so
-`remove_from_filters` updates the filter state incrementally instead of
-rebuilding it from 10^10 keys. A stale Bloom positive after deletion is
-safe (false positives are always re-verified against the exact table);
-the cuckoo filter answers deletions exactly.
+Bloom filters the epoch probes cannot delete — but the cuckoo sidecar
+(seenset.build_sidecar) can, so `remove_from_filters` updates it
+incrementally instead of rebuilding it from 10^10 keys. A stale Bloom
+positive after deletion is safe (false positives are always re-verified
+against the exact table); the cuckoo filter answers deletions exactly.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crawler_spark.functions.coordinates import host_for_provider, with_parsed_coordinates
-from crawler_spark.operators.seenset import FILTER_SCHEMA, CuckooFilter
+from crawler_spark.operators.seenset import SIDECAR_SCHEMA, CuckooFilter
 from crawler_spark.operators.skew import dense_global_seq
 from crawler_spark.storage.snapshots import SnapshotStore
 
@@ -131,14 +131,14 @@ def requeue_deadletters(
 
 
 def remove_from_filters(
-    filters: DataFrame, removed: DataFrame, key_col: str = "seen_hash", n_partitions: int = 32
+    sidecar: DataFrame, removed: DataFrame, key_col: str = "seen_hash", n_partitions: int = 32
 ) -> DataFrame:
-    """Incremental seen-filter maintenance after deletions: apply cuckoo
-    deletions per partition (cogroup, vectorized) WITHOUT rebuilding from
-    the full key set. Bloom state is left as-is — it cannot delete, so it
-    may keep answering 'maybe' for removed keys; that only costs an extra
-    exact-verify, never a false negative. The cuckoo sidecar reflects the
-    deletion exactly, so cuckoo-path probes stop reporting membership."""
+    """Incremental sidecar maintenance after deletions: apply cuckoo
+    deletions per partition of a seenset.build_sidecar frame (cogroup)
+    WITHOUT rebuilding from the full key set. Returns the same schema;
+    cuckoo probes of it stop reporting the removed keys. Bloom filters
+    cannot delete, so they keep answering 'maybe' for removed keys; that
+    only costs an extra exact-verify, never a false negative."""
     pid = F.pmod(F.col(key_col), F.lit(n_partitions)).cast("int")
     rem = removed.select(F.col(key_col).alias("key"), pid.alias("pid"))
 
@@ -160,7 +160,7 @@ def remove_from_filters(
         return out
 
     return (
-        filters.groupBy("pid")
+        sidecar.groupBy("pid")
         .cogroup(rem.groupBy("pid"))
-        .applyInPandas(lambda f, r: _apply(f, r), FILTER_SCHEMA)
+        .applyInPandas(lambda f, r: _apply(f, r), SIDECAR_SCHEMA)
     )

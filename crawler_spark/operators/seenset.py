@@ -1,34 +1,33 @@
 """Partitioned URL-seen membership: Bloom filters + cuckoo-filter sidecar.
 
 The reference's seen-set is an in-memory history array per traversal
-(/root/reference/ghcrawler/lib/request.js:117-121, 247-251) plus the
-AttenuatedQueue TTL cache (/root/reference/ghcrawler/providers/queuing/
-attenuatedQueue.js:36-69) — both vanish at 10^10 URLs. The north rule
-replaces them with:
+(ghcrawler/lib/request.js:117-121, 247-251) plus the AttenuatedQueue TTL
+cache (ghcrawler/providers/queuing/attenuatedQueue.js:36-69) — both
+vanish at 10^10 URLs. The north rule replaces them with:
 
-* **partitioned Bloom filters** — the seen set is hash-partitioned on
-  `pmod(seen_hash, P)`; each partition aggregates its keys into an
-  independent Bloom filter (classic double-hashing construction,
-  Kirsch & Mitzenmacher 2006: g_i(x) = h1(x) + i*h2(x) mod m), built
-  vectorized in numpy inside one `applyInPandas` call per partition —
-  zero per-row Python.
-* **a cuckoo-filter sidecar** (Fan et al., CoNEXT 2014) that supports
-  *deletions* — needed when deadletter purges / forced reprocessing
-  remove keys from the seen set, which a Bloom filter cannot do.
-  Same partitioning, same vectorized build; per-key kick loops only
-  run for the <5% of keys whose two buckets are both full.
-* **an exact verifier anti-join** over only the bloom-positive
+* **partitioned Bloom filters** (`build_filters`) — the seen set is
+  hash-partitioned on `pmod(seen_hash, P)`; each partition aggregates its
+  keys into an independent Bloom filter (classic double-hashing
+  construction, Kirsch & Mitzenmacher 2006: g_i(x) = h1(x) + i*h2(x) mod
+  m), built vectorized in numpy inside one `applyInPandas` call per
+  partition — zero per-row Python. This is the state the epoch probes.
+* **a cuckoo-filter sidecar** (`build_sidecar`; Fan et al., CoNEXT 2014)
+  that supports *deletions* — needed when deadletter purges / forced
+  reprocessing remove keys from the seen set, which a Bloom filter cannot
+  do. Same partitioning; its insert runs per key in Python, so only the
+  deletion path (`ops.remove_from_filters`) builds and reads it.
+* **an exact verifier join** (`flag_seen`) over only the bloom-positive
   candidates — false positives are re-checked against the real seen
-  table, so the final membership is EXACT (zero false positives
-  escape, and blooms have zero false negatives by construction);
-  the filters exist purely to keep the anti-join's build side small.
+  table on the string key, so the final membership is EXACT (zero false
+  positives escape, and blooms have zero false negatives by
+  construction); the filters exist purely to keep the join's probe side
+  small.
 
-Scale shape: filters live as one row per partition `(pid, state)` in a
-DataFrame/table; membership checking co-partitions candidates with
-filter states via a **cogroup applyInPandas** (no broadcast of the
-multi-GB filter set; each task sees exactly one partition's filter and
-that partition's candidates). At small P the states can be broadcast
-instead (`check_membership(..., broadcast=True)`).
+Scale shape: filters live as one row per partition in a DataFrame;
+`probe_candidates` co-partitions candidates with filter states via a
+**cogroup applyInPandas** (no broadcast of the multi-GB filter set; each
+task sees exactly one partition's filter and that partition's
+candidates).
 
 Filter sizing: m = -n·ln(fpp)/ln(2)² bits, k = m/n·ln(2) hashes — at
 fpp=1e-3, ~14.4 bits/key → a 10^10-key seen set is ~18 GB of filter
@@ -147,7 +146,7 @@ class CuckooFilter:
         x = (x * np.uint64(0x5BD1E995)) & _MASK64
         return (x ^ (x >> np.uint64(13))).astype(np.int64)
 
-    # -- mutation (vectorized easy path + per-key kicks for the remainder) --
+    # -- mutation (per key in Python: a free slot in i1 or i2, else the kick loop) --
     def insert_many(self, keys: np.ndarray) -> int:
         fp, i1, i2 = self._fp_and_buckets(keys)
         failed = 0
@@ -220,57 +219,71 @@ class CuckooFilter:
 # DataFrame-level API
 # ---------------------------------------------------------------------------
 
-FILTER_SCHEMA = T.StructType(
+BLOOM_SCHEMA = T.StructType(
     [
         T.StructField("pid", T.IntegerType()),
         T.StructField("n_keys", T.LongType()),
         T.StructField("k_hashes", T.IntegerType()),
-        # cuckoo insert overflows in this partition: when > 0 the cuckoo
-        # filter has false NEGATIVES for the overflowed keys — callers on
-        # the cuckoo-only path must fall back to the exact anti-join for
-        # such partitions (the bloom path is unaffected)
-        T.StructField("overflowed", T.LongType()),
         T.StructField("bloom", T.BinaryType()),
+    ]
+)
+
+SIDECAR_SCHEMA = T.StructType(
+    [
+        T.StructField("pid", T.IntegerType()),
+        T.StructField("n_keys", T.LongType()),
+        # cuckoo insert overflows in this partition: when > 0 the cuckoo
+        # filter has false NEGATIVES for the overflowed keys, so the probe
+        # degrades such partitions to maybe_seen=True
+        T.StructField("overflowed", T.LongType()),
         T.StructField("cuckoo", T.BinaryType()),
     ]
 )
 
 
-def build_filters(
-    seen: DataFrame,
-    key_col: str = "seen_hash",
-    n_partitions: int = 32,
-    fpp: float = 1e-3,
-    capacity_headroom: float = 1.3,
-) -> DataFrame:
-    """One (bloom, cuckoo) filter pair per hash partition of the seen set.
+def _capacity(n_keys: int) -> int:
+    """Filter sizing: 30% headroom over the partition's key count."""
+    return int(n_keys * 1.3) + 16
 
-    `repartition(pid)` co-locates each partition's keys; the per-group
-    numpy build is a single Arrow batch pipeline (no per-row Python).
-    """
+
+def _bloom_state(keys: np.ndarray) -> dict:
+    m_bits, k = bloom_params(_capacity(len(keys)))
+    return {"k_hashes": k, "bloom": bloom_build(keys, m_bits, k)}
+
+
+def _cuckoo_state(keys: np.ndarray) -> dict:
+    ck = CuckooFilter.for_capacity(_capacity(len(keys)))
+    overflowed = ck.insert_many(keys)
+    return {"overflowed": int(overflowed), "cuckoo": ck.to_bytes()}
+
+
+def _per_partition(seen: DataFrame, key_col: str, n_partitions: int, state, schema) -> DataFrame:
+    """One row per hash partition `pmod(key, n_partitions)` of the seen
+    set: `state(unique sorted keys)` as columns next to (pid, n_keys).
+    `groupBy(pid)` co-locates each partition's keys; the per-group numpy
+    build is a single Arrow batch pipeline."""
     pid = F.pmod(F.col(key_col), F.lit(n_partitions)).cast("int")
     parts = seen.select(F.col(key_col).alias("key"), pid.alias("pid"))
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["key"].to_numpy(dtype=np.int64).view(np.uint64)
-        keys = np.unique(keys)
-        n = len(keys)
-        m_bits, k = bloom_params(int(n * capacity_headroom) + 16, fpp)
-        bloom = bloom_build(keys, m_bits, k)
-        ck = CuckooFilter.for_capacity(int(n * capacity_headroom) + 16)
-        overflowed = ck.insert_many(keys)
-        return pd.DataFrame(
-            {
-                "pid": [int(pdf["pid"].iloc[0])],
-                "n_keys": [n],
-                "k_hashes": [k],
-                "overflowed": [int(overflowed)],
-                "bloom": [bloom],
-                "cuckoo": [ck.to_bytes()],
-            }
-        )
+        keys = np.unique(pdf["key"].to_numpy(dtype=np.int64).view(np.uint64))
+        return pd.DataFrame([{"pid": int(pdf["pid"].iloc[0]), "n_keys": len(keys), **state(keys)}])
 
-    return parts.groupBy("pid").applyInPandas(_build, FILTER_SCHEMA)
+    return parts.groupBy("pid").applyInPandas(_build, schema)
+
+
+def build_filters(seen: DataFrame, key_col: str = "seen_hash", n_partitions: int = 32) -> DataFrame:
+    """One bloom filter per hash partition of the seen set (BLOOM_SCHEMA):
+    the state `flag_seen` probes every epoch."""
+    return _per_partition(seen, key_col, n_partitions, _bloom_state, BLOOM_SCHEMA)
+
+
+def build_sidecar(seen: DataFrame, key_col: str = "seen_hash", n_partitions: int = 32) -> DataFrame:
+    """One cuckoo filter per hash partition of the seen set
+    (SIDECAR_SCHEMA): the deletable state `ops.remove_from_filters`
+    maintains. The insert runs per key in Python, so nothing on the
+    epoch's path builds it."""
+    return _per_partition(seen, key_col, n_partitions, _cuckoo_state, SIDECAR_SCHEMA)
 
 
 def probe_candidates(
@@ -278,18 +291,19 @@ def probe_candidates(
     filters: DataFrame,
     key_col: str = "url_hash",
     n_partitions: int = 32,
-    use: str = "bloom",
 ) -> DataFrame:
     """Adds `maybe_seen: boolean` to `candidates` — True iff the key's
-    partition filter reports membership. Neither path yields false
-    negatives: bloom by construction; cuckoo because a partition whose
-    build overflowed (build_filters sizes against it, but inputs can
-    exceed the sizing) is degraded wholesale to maybe_seen=True rather
-    than probed against a filter that may have dropped fingerprints.
+    partition filter reports membership. `filters` is a build_filters
+    frame (bloom probe) or a build_sidecar frame (cuckoo probe). Neither
+    yields false negatives: bloom by construction; cuckoo because a
+    partition whose build overflowed (build_sidecar sizes against it, but
+    inputs can exceed the sizing) is degraded wholesale to maybe_seen=True
+    rather than probed against a filter that may have dropped fingerprints.
 
     Cogroup co-partitions candidates with their single filter row — the
     scale path (no driver collect, no broadcast of filter state).
     """
+    use = "bloom" if "bloom" in filters.columns else "cuckoo"
     pid = F.pmod(F.col(key_col), F.lit(n_partitions)).cast("int")
     cand = candidates.withColumn("_pid", pid)
     out_schema = T.StructType(

@@ -10,9 +10,9 @@ Scale design:
   re-rank primitive, not the global search.
 * LSH — `n_planes` deterministic hyperplanes (components derived from
   xxhash64(dim, plane) — no stored model, reproducible everywhere); sign
-  pattern = bucket id. Query probes its own bucket only → candidate set
-  shrinks by ~2^n_planes; shuffle keys are bucket ids (uniform by
-  construction).
+  pattern = bucket id. Near-dup pairs are compared only within a shared
+  bucket → candidate pairs shrink by ~2^n_planes; shuffle keys are
+  bucket ids (uniform by construction).
 * IVF — coarse centroids picked deterministically (every (N/m)-th vector
   by id — seeded sampling without an iterative k-means fit, good enough
   for a quantizer), vectors assigned to nearest centroid (broadcast
@@ -232,31 +232,6 @@ def with_lsh_bucket(df: DataFrame, n_planes: int = 8, vec_col: str = "embedding"
         return df.withColumn("bucket", _lsh_bucket_expr(F.col(vec_col), n_planes, seed))
     planes = _plane_matrix(df.sparkSession, dim, n_planes, seed)
     return df.withColumn("bucket", _lsh_bucket_expr_lit(F.col(vec_col), planes))
-
-
-def lsh_ann_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: brute-force cosine within the query's sign
-    bucket only. Deterministic; recall trades against 2^n_planes. The
-    query's bucket is computed Spark-side with the same expressions, so
-    hash semantics are identical (no Python xxhash64 reimplementation)."""
-    spark = df.sparkSession
-    qdf = spark.createDataFrame([(list(map(float, query)),)], f"{vec_col} array<double>")
-    qbucket = with_lsh_bucket(qdf, n_planes, vec_col).collect()[0]["bucket"]
-    q = F.array(*[F.lit(float(x)) for x in query])
-    cand = with_lsh_bucket(df, n_planes, vec_col).filter(F.col("bucket") == qbucket)
-    sim = cosine(F.col(vec_col), q)
-    return (
-        cand.select(F.col(id_col).alias("id"), F.round(sim, 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("id"))
-        .limit(k)
-    )
 
 
 # ---------------------------------------------------------------------------

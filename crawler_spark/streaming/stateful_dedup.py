@@ -9,8 +9,8 @@ state held by Spark; this operator instead keeps a compact cuckoo-filter
 digest per hash-partition group as EXPLICIT state (GroupState), giving:
 
 * bounded, serializable state (the filter bytes, not the key set);
-* vectorized per-batch work (numpy over Arrow batches — no per-row
-  Python beyond the cuckoo kick loops);
+* vectorized per-batch work (numpy over Arrow batches); only the
+  cuckoo insert runs per key;
 * deletion support if a retraction stream is ever merged in.
 
 Caveat (documented, inherent to a digest): cuckoo false positives
@@ -64,20 +64,12 @@ def _dedup_group(
         if not len(pdf):
             continue
         keys = pdf["_key"].to_numpy(dtype=np.int64).view(np.uint64)
-        fresh_mask = ~ck.contains_many(keys)
+        fresh = np.nonzero(~ck.contains_many(keys))[0]
         # within-batch first occurrence only (stable order within batch)
-        out_rows = []
-        batch_new = set()
-        for i in np.nonzero(fresh_mask)[0]:
-            k = int(keys[i])
-            if k in batch_new:
-                continue
-            batch_new.add(k)
-            out_rows.append(i)
-        if batch_new:
-            ck.insert_many(np.array(sorted(batch_new), dtype=np.uint64))
-        if out_rows:
-            yield pdf.iloc[out_rows][["pid", "doc_id", "doc_type", "epoch"]]
+        new_keys, first = np.unique(keys[fresh], return_index=True)
+        if len(new_keys):
+            ck.insert_many(new_keys)
+            yield pdf.iloc[np.sort(fresh[first])][["pid", "doc_id", "doc_type", "epoch"]]
     state.update((ck.n_buckets, ck.to_bytes()))
 
 

@@ -40,21 +40,22 @@ def main() -> int:
     sres = sim.run(seed_rows, max_epochs=80)
     print("sim epochs", sres.epochs_run, "log", len(sres.schedule_log))
 
-    store = SnapshotStore(spark, tempfile.mkdtemp())
-    eng = CrawlEngine(
-        spark, store, registry_df(spark, reg_rows), robots_df(spark, robot_rows),
-        host_budget=host_budget, batch_budget=batch_budget,
-    )
-    t0 = time.time()
-    metrics = eng.run(seeds_df(spark, seed_rows), max_epochs=80)
-    print("spark done", round(time.time() - t0, 1), "s, epochs", len(metrics))
+    with tempfile.TemporaryDirectory() as root:
+        store = SnapshotStore(spark, root)
+        eng = CrawlEngine(
+            spark, store, registry_df(spark, reg_rows), robots_df(spark, robot_rows),
+            host_budget=host_budget, batch_budget=batch_budget,
+        )
+        t0 = time.time()
+        metrics = eng.run(seeds_df(spark, seed_rows), max_epochs=80)
+        print("spark done", round(time.time() - t0, 1), "s, epochs", len(metrics))
 
-    violations = parity_violations(engine_state(store), sres)
-    for v in violations:
-        print(v)
-    ok = not violations
-    print("PARITY:", "OK" if ok else "FAIL")
-    spark.stop()
+        violations = parity_violations(engine_state(store), sres)
+        for v in violations:
+            print(v)
+        ok = not violations
+        print("PARITY:", "OK" if ok else "FAIL")
+        spark.stop()
     return 0 if ok else 1
 
 

@@ -1,6 +1,6 @@
 """Multimodal pipeline tests: the Spark plumbing (schemas, Arrow batch
-shapes, mapInPandas wiring, frame sampling, resize geometry) is real; the
-decode kernel is the deterministic stub (no codecs in this container).
+shapes, mapInPandas wiring) is real; the decode kernel is the
+deterministic stub (no codecs in this container).
 """
 
 from __future__ import annotations
@@ -12,10 +12,7 @@ from crawler_spark.data.generators import gen_documents_spans
 from crawler_spark.operators.multimodal import (
     FEATURE_DIM,
     decode_media,
-    media_feature_table,
     media_from_documents,
-    resize_plan,
-    sample_frames,
 )
 
 
@@ -64,30 +61,6 @@ def test_decoded_fields_shape(decoded):
             assert r["sample_rate"] == 0
 
 
-def test_resize_plan_geometry(decoded):
-    plan = resize_plan(decoded, max_side=256)
-    for r in plan.collect():
-        assert max(r["out_width"], r["out_height"]) <= 256
-        if max(r["width"], r["height"]) <= 256:
-            assert r["scale"] == 1.0  # never upscale
-        else:
-            assert r["scale"] < 1.0
-
-
-def test_sample_frames_video_only(decoded):
-    frames = sample_frames(decoded, every_n=30, max_frames=8)
-    rows = frames.collect()
-    assert all(r["frame_idx"] % 30 == 0 for r in rows)
-    per_ref: dict = {}
-    for r in rows:
-        per_ref.setdefault(r["media_ref"], []).append(r["frame_idx"])
-    for ref, idxs in per_ref.items():
-        assert len(idxs) <= 8
-        assert idxs == sorted(idxs)
-    n_videos = decoded.filter("media_type = 'video'").count()
-    assert len(per_ref) == n_videos
-
-
 def test_pillow_path_is_marked_unimplemented(media_df):
     with pytest.raises(NotImplementedError):
         decode_media(media_df, decode_fn="pillow")
@@ -95,7 +68,7 @@ def test_pillow_path_is_marked_unimplemented(media_df):
 
 def test_feature_table_feeds_similarity(spark, media_df):
     docs = gen_documents_spans(spark, 100, seed=5)
-    feats = media_feature_table(docs)
+    feats = decode_media(media_from_documents(docs))
     row = feats.first()
     assert len(row["feature"]) == FEATURE_DIM
     # features are a valid embedding column for the ANN operators

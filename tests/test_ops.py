@@ -14,7 +14,7 @@ from crawler_spark.operators.ops import (
     remove_from_filters,
     requeue_deadletters,
 )
-from crawler_spark.operators.seenset import build_filters, probe_candidates
+from crawler_spark.operators.seenset import build_filters, build_sidecar, probe_candidates
 from crawler_spark.storage.snapshots import SnapshotStore
 
 FRONTIER_ROWS = [
@@ -84,17 +84,19 @@ def test_requeue_deadletters_clears_seen_and_refills_frontier(spark, store):
 
 def test_incremental_cuckoo_deletion(spark):
     seen = spark.createDataFrame([(h,) for h in range(1000, 1400)], "seen_hash long")
-    filters = build_filters(seen, n_partitions=4).cache()
+    sidecar = build_sidecar(seen, n_partitions=4).cache()
     removed = spark.createDataFrame([(h,) for h in range(1000, 1100)], "seen_hash long")
-    updated = remove_from_filters(filters, removed, n_partitions=4).cache()
+    updated = remove_from_filters(sidecar, removed, n_partitions=4).cache()
+    assert updated.columns == sidecar.columns
     cand = seen.select(F.col("seen_hash").alias("url_hash"))
     # cuckoo path: removed keys no longer members, survivors still are
     probed = {r["url_hash"]: r["maybe_seen"]
-              for r in probe_candidates(cand, updated, n_partitions=4, use="cuckoo").collect()}
+              for r in probe_candidates(cand, updated, n_partitions=4).collect()}
     assert all(probed[h] for h in range(1100, 1400))          # no false negatives for survivors
     assert sum(probed[h] for h in range(1000, 1100)) <= 2      # removed gone (fp-rate slack)
-    # bloom path is allowed to stay stale-positive (cannot delete), but
+    # the bloom half is allowed to stay stale-positive (cannot delete), but
     # must still have zero false negatives for survivors
+    filters = build_filters(seen, n_partitions=4)
     bloom = {r["url_hash"]: r["maybe_seen"]
-             for r in probe_candidates(cand, updated, n_partitions=4, use="bloom").collect()}
+             for r in probe_candidates(cand, filters, n_partitions=4).collect()}
     assert all(bloom[h] for h in range(1100, 1400))

@@ -1,8 +1,10 @@
 """Seen-set membership structures (SURVEY.md M3 / north rule): partitioned
-Bloom filters, cuckoo sidecar with deletions, and the exact membership test
+Bloom filters (the state the epoch probes), the cuckoo sidecar with
+deletions (built only on the deletion path), and the exact membership test
 the engine runs (plain and bloom-accelerated). Properties: ZERO false
 negatives (hard invariant), measured FPR below target, deletion support,
-exactness of the composed filter+verify.
+bloom bytes pinned to the documented sizing, exactness of the composed
+filter+verify.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from crawler_spark.operators.seenset import (
     bloom_params,
     bloom_probe,
     build_filters,
+    build_sidecar,
     flag_seen,
     probe_candidates,
 )
@@ -83,10 +86,27 @@ def filters(spark, seen_df):
     return f
 
 
+@pytest.fixture(scope="module")
+def sidecar(spark, seen_df):
+    s = build_sidecar(seen_df, n_partitions=8).cache()
+    s.count()
+    return s
+
+
 def test_build_filters_partition_coverage(filters, seen_df):
+    assert filters.columns == ["pid", "n_keys", "k_hashes", "bloom"]
     rows = filters.collect()
     assert {r["pid"] for r in rows} == set(range(8)) or len(rows) <= 8
     assert sum(r["n_keys"] for r in rows) == seen_df.distinct().count()
+    # every partition's bloom is bloom_build over that partition's unique
+    # keys at the documented sizing: bloom_params(int(n * 1.3) + 16), fpp 1e-3
+    keys = SEEN[:4000]
+    pids = keys.view(np.int64) % 8  # == pmod(seen_hash, 8)
+    for r in rows:
+        part = np.unique(keys[pids == r["pid"]])
+        m, k = bloom_params(int(len(part) * 1.3) + 16)
+        assert (r["n_keys"], r["k_hashes"]) == (len(part), k)
+        assert r["bloom"] == bloom_build(part, m, k)
 
 
 def test_probe_no_false_negatives_spark(spark, filters, seen_df):
@@ -95,9 +115,10 @@ def test_probe_no_false_negatives_spark(spark, filters, seen_df):
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_probe_cuckoo_path(spark, filters, seen_df):
+def test_probe_cuckoo_path(spark, sidecar, seen_df):
+    assert sidecar.columns == ["pid", "n_keys", "overflowed", "cuckoo"]
     cand = seen_df.select(F.col("seen_hash").alias("url_hash"))
-    probed = probe_candidates(cand, filters, n_partitions=8, use="cuckoo")
+    probed = probe_candidates(cand, sidecar, n_partitions=8)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
@@ -126,20 +147,20 @@ def test_empty_partition_candidates_pass_through(spark, seen_df):
     assert probed.filter(F.col("maybe_seen")).count() == 0
 
 
-def test_cuckoo_overflowed_partition_degrades_to_maybe_seen(spark, filters, seen_df):
+def test_cuckoo_overflowed_partition_degrades_to_maybe_seen(spark, sidecar, seen_df):
     """A partition whose cuckoo build overflowed has false negatives for
     the lost fingerprints, so the cuckoo probe must degrade the WHOLE
     partition to maybe_seen=True (conservative — the exact verify
     restores precision) instead of probing a filter that dropped keys."""
     # force the overflowed flag on pid 3 without rebuilding a filter
-    forced = filters.withColumn(
+    forced = sidecar.withColumn(
         "overflowed",
         F.when(F.col("pid") == 3, F.lit(7)).otherwise(F.col("overflowed")),
     )
     cand = spark.createDataFrame(
         [(int(np.int64(k)),) for k in UNSEEN[:2000]], "url_hash long"
     )
-    probed = probe_candidates(cand, forced, n_partitions=8, use="cuckoo")
+    probed = probe_candidates(cand, forced, n_partitions=8)
     pid = F.pmod(F.col("url_hash"), F.lit(8)).cast("int")
     rows = probed.withColumn("_pid", pid).collect()
     # every candidate in the degraded partition reads maybe_seen
