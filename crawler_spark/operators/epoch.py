@@ -29,9 +29,9 @@ DataFrame DAG committed atomically to the snapshot store:
    (seenset.flag_seen; request.js:117-121, 247-251), inserted with
    deterministic `enqueued_seq` derived from (pop_index, edge_idx) — never
    `monotonically_increasing_id` (SURVEY.md §4).
-7. **commit** — one atomic snapshot replacing {frontier, seen} and
-   appending {documents, schedule_log, deadletters, epoch_metrics,
-   epoch_host_metrics, harvest_events}.
+7. **commit** — one atomic snapshot replacing {frontier} and appending
+   {seen, documents, schedule_log, deadletters, epoch_metrics,
+   epoch_host_metrics, harvest_events}; `seen` gains only new keys (`_commit`).
 
 Scale notes: enqueued_seq assignment over the epoch's *new* rows uses a
 range-partitioned two-phase dense rank (skew.py::dense_global_seq — no
@@ -355,17 +355,12 @@ class CrawlEngine:
         requests reach the freshness gates at all."""
         snap = self.store.snapshot()
         next_seq = int(snap.meta.get("next_seq", 0))
-        frontier = self.store.read("frontier")
         seen = self.store.read("seen")
         entries = seeds_to_frontier(seeds)
         front, seen_new, fate_rows, cached = enqueue_batch(entries, seen, next_seq, ["_order"], seen_epoch=epoch)
         counters = _enqueue_counters(collect_fate_counters(fate_rows))
-        self.store.commit(
-            epoch=snap.epoch,
-            replace={
-                "frontier": frontier.unionByName(front),
-                "seen": seen.unionByName(seen_new),
-            },
+        self._commit(
+            snap, snap.epoch, seen, seen_new, replace={}, append={"frontier": front},
             meta={"next_seq": next_seq + counters["enqueued"], "counters": counters},
         )
         for df in cached:
@@ -566,7 +561,6 @@ class CrawlEngine:
             .unionByName(leftover.select(*FRONTIER_COLS))
             .unionByName(new_frontier_rows)
         )
-        new_seen = seen.unionByName(new_seen_rows)
         # K4/K5 delta stream (azureQueueStore.js:66-70 / webhookDeltaStore):
         # one event per upsert, with DETERMINISTIC event time — one epoch ≡
         # the reference's 5 s loop quantum (config.REQUEUE_DELAY_EPOCHS
@@ -581,9 +575,9 @@ class CrawlEngine:
              + F.make_interval(secs=F.lit(epoch * 5))).alias("event_ts"),
         )
 
-        self.store.commit(
-            epoch=epoch,
-            replace={"frontier": new_frontier, "seen": new_seen},
+        self._commit(
+            snap, epoch, seen, new_seen_rows,
+            replace={"frontier": new_frontier},
             append={
                 "documents": docs,
                 "schedule_log": log,
@@ -599,6 +593,19 @@ class CrawlEngine:
         for df in enq_cached:
             df.unpersist()
         return metrics
+
+    # ------------------------------------------------------------------
+    def _commit(self, snap, epoch: int, seen: DataFrame, new_seen: DataFrame, replace: dict,
+                append: dict, meta: dict) -> None:
+        """Commit `seen` as an append log (flag_seen admits only absent keys,
+        so `new_seen` is one more dir, like an insert-only Iceberg commit),
+        folded into one dir when one more would make its read start a listing job."""
+        limit = int(self.spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        if len(snap.tables["seen"]) >= limit:
+            replace = {**replace, "seen": seen.unionByName(new_seen)}
+        else:
+            append = {**append, "seen": new_seen}
+        self.store.commit(epoch=epoch, replace=replace, append=append, meta=meta)
 
     # ------------------------------------------------------------------
     def _cur_version_col(self) -> F.Column:

@@ -355,9 +355,10 @@ def flag_seen(
     of `seen`, else NULL. Exact on the full string key, so a 64-bit hash
     collision can never drop an unseen URL (north rule).
 
-    `seen` must be unique on `seen_key` (every writer adds only absent
-    keys), so the left join keeps one row per candidate without a
-    distinct — and without an extra shuffle of the whole seen set.
+    `seen` must be unique on `seen_key` (the store's append log of each
+    epoch's new keys relies on it: every writer adds only absent keys),
+    so the left join keeps one row per candidate without a distinct —
+    and without an extra shuffle of the whole seen set.
 
     Without `filters` this is a plain left join of `_skey` against
     `seen_key`. With `filters` (per-partition states from build_filters,

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -186,7 +187,8 @@ class SnapshotStore:
 
         `replace[t]` swaps table t's file set; `append[t]` adds files to
         the previous set (append-only logs: documents, schedule_log,
-        metrics). Unmentioned tables carry forward unchanged.
+        metrics, the URL-seen set). Unmentioned tables carry forward
+        unchanged. A commit that raises `CommitConflict` removes its dirs.
         """
         prev = self.snapshot()
         tables: dict[str, list[str]] = dict(prev.tables) if prev else {}
@@ -239,6 +241,11 @@ class SnapshotStore:
         try:
             os.link(tmp, self._manifest_path(version))
         except FileExistsError:
+            # no manifest lists this commit's dirs, but a reader that globs
+            # data/<table>/* (streaming/harvest_stream.py) would see them
+            published = {d for ds in (prev.tables.values() if prev else ()) for d in ds}
+            for d in {d for ds in tables.values() for d in ds} - published:
+                shutil.rmtree(d)
             raise CommitConflict(
                 f"snapshot v{version} was committed concurrently; re-plan from the new snapshot"
             ) from None

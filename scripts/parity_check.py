@@ -50,7 +50,12 @@ def main() -> int:
         metrics = eng.run(seeds_df(spark, seed_rows), max_epochs=80)
         print("spark done", round(time.time() - t0, 1), "s, epochs", len(metrics))
 
-        violations = parity_violations(engine_state(store), sres)
+        state = engine_state(store)
+        violations = parity_violations(state, sres)
+        # engine_state's seen dict hides a key stored twice (in two dirs)
+        n_seen = store.read("seen").count()
+        if n_seen != len(state["seen"]):
+            violations.append(f"seen_key not unique ({n_seen} rows, {len(state['seen'])} keys)")
         for v in violations:
             print(v)
         ok = not violations

@@ -79,6 +79,27 @@ def test_seen_set_exact_match(sim_result, spark_run):
     assert spark_seen == sim_result.seen
 
 
+def test_seen_is_an_append_log_of_each_epochs_new_keys(spark, sim_result, spark_run):
+    """Each commit appends only the keys it first saw: after bootstrap and
+    three epochs the manifest lists four `seen` dirs, dir i >= 1 holds
+    exactly the keys epoch i-1 added, no key is in two dirs, and the
+    table equals the simulator's seen set as of that epoch."""
+    store, _ = spark_run
+    dirs = store.snapshot(3).tables["seen"]
+    assert len(dirs) == 4
+    rows = [spark.read.parquet(d).collect() for d in dirs]
+    keys = [r["seen_key"] for rs in rows for r in rs]
+    assert len(keys) == len(set(keys))
+    seen = {r["seen_key"]: r["first_seen_epoch"] for rs in rows for r in rs}
+    assert seen == {k: e for k, e in sim_result.seen.items() if e <= 2}
+    # the bootstrap's seed keys carry epoch 0 as well
+    boot = {r["seen_key"] for r in rows[0]}
+    assert boot and all(r["first_seen_epoch"] == 0 for r in rows[0])
+    for i in (1, 2, 3):
+        added = {r["seen_key"] for r in rows[i]}
+        assert added and added == {k for k, e in seen.items() if e == i - 1} - boot
+
+
 def test_document_span_sequence_invariant(sim_result, spark_run):
     # per-row invariant: span-sequence equality (kind, text, media_ref,
     # order) on the latest store row per doc, plus exact _metadata parity
@@ -161,15 +182,16 @@ def test_dedup_documents_parity(spark, fixture_rows, sim_result, spark_run):
     assert all(v == 1 for v in reps_per_cluster.values())
 
 
-def test_resume_from_checkpoint(spark, fixture_rows, spark_run, tmp_path_factory):
-    """Kill between epochs, rebuild the engine from the snapshot store,
-    continue — final frontier/seen/log identical to the uninterrupted run
-    (SURVEY.md M6; Iceberg-snapshot resumability of the north rule)."""
+@pytest.fixture(scope="module")
+def resumed_run(spark, fixture_rows, spark_run, tmp_path_factory):
+    """The parity crawl again, killed after four epochs and resumed by a
+    new engine from the store's latest snapshot. The listing threshold is
+    3 for the whole run, so every third commit folds `seen` into one dir:
+    the crash leaves a multi-dir `seen` and the resumed run folds again."""
     reg, seeds, robots = fixture_rows
-    full_store, full_metrics = spark_run
+    _, full_metrics = spark_run
     n_epochs = len(full_metrics)
-    assert n_epochs >= 4
-
+    assert n_epochs >= 6
     store = SnapshotStore(spark, str(tmp_path_factory.mktemp("resume")))
 
     def make_engine():
@@ -178,20 +200,53 @@ def test_resume_from_checkpoint(spark, fixture_rows, spark_run, tmp_path_factory
             host_budget=HOST_BUDGET, batch_budget=BATCH_BUDGET,
         )
 
-    eng = make_engine()
-    eng.bootstrap(seeds_df(spark, seeds))
-    for epoch in range(3):
-        eng.run_epoch(epoch)
-    # simulate crash: throw the engine away; a NEW engine resumes from the
-    # store's latest snapshot (epoch index = snapshot epoch + 1)
-    eng2 = make_engine()
-    epoch = store.snapshot().epoch + 1
-    while epoch < n_epochs:
-        eng2.run_epoch(epoch)
-        epoch += 1
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    was = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        eng = make_engine()
+        eng.bootstrap(seeds_df(spark, seeds))
+        for epoch in range(4):
+            eng.run_epoch(epoch)
+        # simulate crash: throw the engine away; a NEW engine resumes from
+        # the store's latest snapshot (epoch index = snapshot epoch + 1)
+        eng2 = make_engine()
+        epoch = store.snapshot().epoch + 1
+        while epoch < n_epochs:
+            eng2.run_epoch(epoch)
+            epoch += 1
+    finally:
+        spark.conf.set(conf, was)
+    return store
 
+
+def _seen_at(store, version=None):
+    rows = store.read("seen", version=version).collect()
+    seen = {r["seen_key"]: r["first_seen_epoch"] for r in rows}
+    assert len(rows) == len(seen)
+    return seen
+
+
+def test_resume_from_checkpoint(spark_run, resumed_run):
+    """Kill between epochs, rebuild the engine from the snapshot store,
+    continue — final frontier/seen/log identical to the uninterrupted run
+    (SURVEY.md M6; Iceberg-snapshot resumability of the north rule)."""
+    full_store, _ = spark_run
+    store = resumed_run
     assert _spark_log(store) == _spark_log(full_store)
-    a = {r["seen_key"]: r["first_seen_epoch"] for r in store.read("seen").collect()}
-    b = {r["seen_key"]: r["first_seen_epoch"] for r in full_store.read("seen").collect()}
-    assert a == b
+    assert _seen_at(store) == _seen_at(full_store)
     assert store.read("frontier").count() == full_store.read("frontier").count()
+
+
+def test_seen_fold_bounds_dirs_and_keeps_time_travel(spark_run, resumed_run):
+    """With the listing threshold at 3, the commit that finds three `seen`
+    dirs folds them into one: the crawl never lists more than 3, ends with
+    the unfolded run's seen set, and a version from before a fold still
+    reads back its own rows."""
+    full_store, _ = spark_run
+    store = resumed_run
+    versions = range(store.current_version() + 1)
+    assert len(versions) >= 7  # bootstrap + at least 6 epochs
+    assert [len(store.snapshot(v).tables["seen"]) for v in versions] == [v % 3 + 1 for v in versions]
+    assert _seen_at(store) == _seen_at(full_store)
+    assert _seen_at(store, 2) == _seen_at(full_store, 2)  # three dirs, before the first fold

@@ -65,6 +65,11 @@ def test_flush_queue(store):
 
 
 def test_requeue_deadletters_clears_seen_and_refills_frontier(spark, store):
+    # seen is an append log: a later commit added one more dir of keys
+    store.commit(epoch=5, append={"seen": spark.createDataFrame(
+        [("pypi@cd:/pypi/pypi/-/c/2.0", 333, 5)], "seen_key string, seen_hash long, first_seen_epoch int",
+    )}, meta={"next_seq": 3})
+    assert len(store.snapshot().tables["seen"]) == 2
     n = requeue_deadletters(spark, store, epoch=6)
     assert n == 1
     frontier = store.read("frontier").collect()
@@ -78,6 +83,8 @@ def test_requeue_deadletters_clears_seen_and_refills_frontier(spark, store):
     seen_keys = {x["seen_key"] for x in store.read("seen").collect()}
     assert "npm@cd:/npm/npmjs/-/dead/9.9.9" not in seen_keys
     assert "npm@cd:/npm/npmjs/-/a/1.0.0" in seen_keys  # others untouched
+    assert "pypi@cd:/pypi/pypi/-/c/2.0" in seen_keys
+    assert len(store.snapshot().tables["seen"]) == 1  # rewritten as one dir
     assert store.read("deadletters").count() == 0
     assert requeue_deadletters(spark, store, epoch=7) == 0  # idempotent on empty
 

@@ -60,7 +60,9 @@ def test_manifest_promotion_is_atomic_rename(spark, tmp_path):
 def test_stale_commit_raises_conflict_and_keeps_winner(spark, tmp_path):
     """A commit planned from snapshot v0 that reaches promotion after
     another committer already published v1 raises CommitConflict; the
-    winner's manifest stays byte-identical and no .tmp is left behind."""
+    winner's manifest stays byte-identical, no .tmp is left behind, and
+    the loser's data dirs are gone (a reader globbing data/<table>/*
+    must not see an unpublished commit) while the winner's stay."""
     root = str(tmp_path)
     winner, loser = SnapshotStore(spark, root), SnapshotStore(spark, root)
     winner.commit(epoch=0, replace={"t": spark.createDataFrame([(1,)], "x long")})
@@ -70,18 +72,25 @@ def test_stale_commit_raises_conflict_and_keeps_winner(spark, tmp_path):
 
     def write_then_lose_race(table, df):
         # the loser has read v0 and is writing its data: the winner commits v1
-        winner.commit(epoch=1, replace={"t": spark.createDataFrame([(2,)], "x long")})
-        with open(v1, "rb") as fh:
-            won["manifest"] = fh.read()
+        if not won:
+            winner.commit(epoch=1, replace={"t": spark.createDataFrame([(2,)], "x long")})
+            with open(v1, "rb") as fh:
+                won["manifest"] = fh.read()
         return write_data(table, df)
 
     loser._write_data = write_then_lose_race
     with pytest.raises(CommitConflict):
-        loser.commit(epoch=1, replace={"t": spark.createDataFrame([(3,)], "x long")})
+        loser.commit(epoch=1, replace={"t": spark.createDataFrame([(3,)], "x long")},
+                     append={"log": spark.createDataFrame([(4,)], "y long")})
     assert sorted(os.listdir(os.path.join(root, "manifests"))) == ["v00000000.json", "v00000001.json"]
     with open(v1, "rb") as fh:
         assert fh.read() == won["manifest"]
     assert [r["x"] for r in loser.read("t").collect()] == [2]
+    assert [r["x"] for r in loser.read("t", version=0).collect()] == [1]
+    winner_dirs = sorted(d for v in (0, 1) for d in winner.snapshot(v).tables["t"])
+    data = os.path.join(root, "data")
+    assert sorted(os.path.join(data, "t", d) for d in os.listdir(os.path.join(data, "t"))) == winner_dirs
+    assert os.listdir(os.path.join(data, "log")) == []
 
 
 def test_engine_runs_transparently_over_chunked_store(spark, tmp_path):
