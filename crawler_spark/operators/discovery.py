@@ -129,10 +129,10 @@ def resolve_registry_sources(registry: DataFrame, tags: DataFrame | None) -> Dat
         return registry
     base = registry.withColumn(
         "_rkey",
-        # to_json(struct) -- injective for a fixed schema; a separator-based
-        # concat lets ids containing the separator byte collide and
-        # cross-assign discovered sources (the same reasoning as
-        # snapshots.py's chunk key)
+        # to_json(struct) -- injective for a fixed schema: field names say
+        # which column is NULL, and JSON escaping keeps a separator byte
+        # inside an id from colliding two tuples, which a separator-based
+        # concat allows (and would cross-assign discovered sources)
         F.to_json(F.struct("provider", "namespace", "name", "version")),
     )
     todo = base.filter(

@@ -355,7 +355,7 @@ class CrawlEngine:
         requests reach the freshness gates at all."""
         snap = self.store.snapshot()
         next_seq = int(snap.meta.get("next_seq", 0))
-        seen = self.store.read("seen")
+        seen = self.store.read("seen", version=snap.version)
         entries = seeds_to_frontier(seeds)
         front, seen_new, fate_rows, cached = enqueue_batch(entries, seen, next_seq, ["_order"], seen_epoch=epoch)
         counters = _enqueue_counters(collect_fate_counters(fate_rows))
@@ -372,8 +372,8 @@ class CrawlEngine:
         spark = self.spark
         snap = self.store.snapshot()
         next_seq = int(snap.meta.get("next_seq", 0))
-        frontier = self.store.read("frontier")
-        seen = self.store.read("seen")
+        frontier = self.store.read("frontier", version=snap.version)
+        seen = self.store.read("seen", version=snap.version)
 
         eligible = frontier.filter(
             (F.col("not_before_epoch") <= epoch) & (F.col("parent_epoch") < epoch)
@@ -443,7 +443,7 @@ class CrawlEngine:
         # -- fetch simulation + outcome routing (S8/S14, F1-F17); the
         # documents snapshot (epoch start) backs the dispatcher's
         # storage-first read (dispatcher.js:29-43)
-        docs_now = self.store.read("documents")
+        docs_now = self.store.read("documents", version=snap.version)
         if docs_now is None:
             docs_now = self.spark.createDataFrame(
                 [],
@@ -599,13 +599,15 @@ class CrawlEngine:
                 append: dict, meta: dict) -> None:
         """Commit `seen` as an append log (flag_seen admits only absent keys,
         so `new_seen` is one more dir, like an insert-only Iceberg commit),
-        folded into one dir when one more would make its read start a listing job."""
+        folded into one dir when one more would make its read start a listing job.
+        `snap` is the commit's base: a commit published since it raises
+        `CommitConflict`."""
         limit = int(self.spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
         if len(snap.tables["seen"]) >= limit:
             replace = {**replace, "seen": seen.unionByName(new_seen)}
         else:
             append = {**append, "seen": new_seen}
-        self.store.commit(epoch=epoch, replace=replace, append=append, meta=meta)
+        self.store.commit(epoch=epoch, replace=replace, append=append, meta=meta, base=snap)
 
     # ------------------------------------------------------------------
     def _cur_version_col(self) -> F.Column:
@@ -923,8 +925,8 @@ class CrawlEngine:
         # One epoch can schedule two DIFFERENT urls that resolve to the
         # same document (a pinned and an unpinned request for the same
         # package both resolving to latest): the simulator's dict write
-        # (simulator.py:396) makes the LAST pop win, and the chunked
-        # store requires (doc_id, epoch) unique per committed batch.
+        # (simulator.py:396) makes the LAST pop win, so the engine must
+        # land one row per (doc_id, epoch) for documents parity.
         # Mirror it exactly: keep the max-pop_index row per doc_id.
         # pop_index is unique within the epoch, so this is deterministic;
         # duplicates are a same-document rarity, so the per-doc window

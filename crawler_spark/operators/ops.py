@@ -36,11 +36,15 @@ def queue_info(store: SnapshotStore) -> DataFrame:
 def flush_queue(store: SnapshotStore, queue: str, epoch: int) -> int:
     """Drop every frontier entry in `queue` (crawlerService.js:88-94
     flushQueue), committed as a new snapshot. Returns rows flushed."""
-    frontier = store.read("frontier")
+    snap = store.snapshot()
+    frontier = store.read("frontier", version=snap.version)
     keep = frontier.filter(F.col("queue") != queue)
     row = frontier.agg(F.count_if(F.col("queue") == queue).alias("f")).collect()[0]
     flushed = int(row["f"])
-    store.commit(epoch=epoch, replace={"frontier": keep}, meta={"op": f"flush:{queue}"})
+    # flushing frees no seqs: later enqueues continue past the survivors'
+    next_seq = int(snap.meta.get("next_seq", 0))
+    store.commit(epoch=epoch, replace={"frontier": keep},
+                 meta={"op": f"flush:{queue}", "next_seq": next_seq}, base=snap)
     return flushed
 
 
@@ -56,10 +60,11 @@ def publish_local(store: SnapshotStore, epoch: int) -> int:
     published."""
     from crawler_spark.config import QUEUE_NAMES
 
-    frontier = store.read("frontier")
+    snap = store.snapshot()
+    frontier = store.read("frontier", version=snap.version)
     local = frontier.filter(F.col("scope") == "local")
     glob = frontier.filter(F.col("scope") != "local")
-    next_seq = int(store.snapshot().meta.get("next_seq", 0))
+    next_seq = int(snap.meta.get("next_seq", 0))
     qorder = F.coalesce(
         *[F.when(F.col("queue") == q, F.lit(i)) for i, q in enumerate(QUEUE_NAMES)],
         F.lit(len(QUEUE_NAMES)),
@@ -72,6 +77,7 @@ def publish_local(store: SnapshotStore, epoch: int) -> int:
         epoch=epoch,
         replace={"frontier": glob.unionByName(moved.select(*frontier.columns))},
         meta={"op": "publish", "next_seq": next_seq + n},
+        base=snap,
     )
     return n
 
@@ -84,16 +90,17 @@ def requeue_deadletters(
     (attempt_count reset), REMOVE their keys from the exact seen set so
     the fresh enqueue isn't history-filtered, and clear the deadletter
     table — one atomic snapshot commit."""
-    dead = store.read("deadletters")
+    snap = store.snapshot()
+    dead = store.read("deadletters", version=snap.version)
     if dead is None or dead.isEmpty():
         return 0
-    seen = store.read("seen")
-    frontier = store.read("frontier")
+    seen = store.read("seen", version=snap.version)
+    frontier = store.read("frontier", version=snap.version)
 
     parsed = with_parsed_coordinates(dead.select("url", F.col("type").alias("request_type")))
     skey = F.concat(F.col("request_type"), F.lit("@"), F.col("canonical_url"))
     # next_seq continues from the stored high-water mark
-    next_seq = int(store.snapshot().meta.get("next_seq", 0))
+    next_seq = int(snap.meta.get("next_seq", 0))
     entries = parsed.select(
         F.col("canonical_url").alias("url"),
         F.col("request_type").alias("type"),
@@ -126,6 +133,7 @@ def requeue_deadletters(
             "deadletters": empty_dead,
         },
         meta={"op": "requeue_deadletters", "next_seq": next_seq + n},
+        base=snap,
     )
     return n
 

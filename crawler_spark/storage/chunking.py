@@ -129,27 +129,18 @@ def chunk_document_spans(
 
 
 def reassemble_documents(
-    chunks: DataFrame,
-    id_col: str = "doc_id",
-    spans_col: str = "spans",
-    meta_cols: list[str] | None = None,
+    chunks: DataFrame, id_col: str = "doc_id", spans_col: str = "spans"
 ) -> DataFrame:
     """Exact inverse of `chunk_document_spans`: `(id, spans)` with the
     original span order (collect_list order is nondeterministic, so the
-    sort key is the explicit chunk_seq, never partition order).
-
-    `meta_cols` are per-document columns replicated on every chunk row
-    (the snapshot store's storage shape); each is carried through with
-    `first()` — valid because replication makes them group-constant."""
-    meta_cols = meta_cols or []
+    sort key is the explicit chunk_seq, never partition order)."""
     return chunks.groupBy(id_col).agg(
         F.flatten(
             F.transform(
                 F.array_sort(F.collect_list(F.struct(F.col("chunk_seq"), F.col(spans_col)))),
                 lambda c: c[spans_col],
             )
-        ).alias(spans_col),
-        *[F.first(c).alias(c) for c in meta_cols],
+        ).alias(spans_col)
     )
 
 

@@ -132,50 +132,6 @@ def test_roundtrip_through_snapshot_store(spark, docs, tmp_path):
     assert back == {doc_id: [tuple(s) for s in spans] for doc_id, spans in rows}
 
 
-def test_store_chunks_oversized_docs_transparently(spark, docs, tmp_path):
-    """K2 size flag ON the store itself: commits of a chunk-enabled table
-    split oversized span arrays into block rows on disk (no single giant
-    parquet row), while read() reassembles the EXACT span sequence
-    (kind, text, media_ref, order) with metadata columns intact — over an
-    append-log commit pattern like the engine's documents table."""
-    import pyspark.sql.functions as F
-
-    from crawler_spark.storage.snapshots import SnapshotStore
-
-    df, rows = docs
-    d0 = df.withColumn("epoch", F.lit(0)).withColumn("doc_type", F.lit("npm"))
-    d1 = (
-        df.limit(10).withColumn("epoch", F.lit(1)).withColumn("doc_type", F.lit("reuse"))
-        .withColumn("doc_id", F.concat(F.lit("e1-"), F.col("doc_id")))
-    )
-    store = SnapshotStore(
-        spark, str(tmp_path / "store"),
-        chunk_tables={"documents": {
-            "id_cols": ["doc_id", "epoch"], "spans_col": "spans",
-            "max_bytes": 512, "block_bytes": 256,
-        }},
-    )
-    store.commit(0, append={"documents": d0})
-    store.commit(1, append={"documents": d1})
-
-    # on disk: chunk rows, with at least one genuinely split document
-    raw = spark.read.parquet(*store.snapshot().tables["documents"])
-    assert {"chunk_seq", "n_chunks"} <= set(raw.columns)
-    assert raw.filter(F.col("n_chunks") > 1).count() > 0
-    assert raw.count() > len(rows) + 10  # more chunk rows than documents
-
-    back = store.read("documents")
-    assert set(back.columns) == {"doc_id", "epoch", "doc_type", "spans"}
-    got = {
-        (r["doc_id"], r["epoch"]): (r["doc_type"], [tuple(s) for s in r["spans"]])
-        for r in back.collect()
-    }
-    want = {(doc_id, 0): ("npm", [tuple(s) for s in spans]) for doc_id, spans in rows}
-    e1 = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in df.limit(10).collect()}
-    want.update({(f"e1-{k}", 1): ("reuse", v) for k, v in e1.items()})
-    assert got == want
-
-
 def test_span_bytes_is_payload_plus_framing(spark):
     df = spark.createDataFrame(
         [("d", [("text", "héllo", None, 0), ("media", None, "ref12", 1)])], SPAN_SCHEMA

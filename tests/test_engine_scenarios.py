@@ -12,6 +12,8 @@ deadletter path completes in ~6 epochs instead of ~21.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import crawler_spark.operators.epoch as epoch_mod
@@ -283,8 +285,8 @@ def test_pinned_and_unpinned_same_doc_single_row(spark, tmp_path):
     """Two DIFFERENT scheduled urls resolving to the SAME document in one
     epoch (an unpinned and a pinned request for the same package, latest
     = the pinned revision) must land ONE document row, the simulator's
-    dict-write last-pop-wins semantics (simulator.py:396) — and the
-    chunked store's (doc_id, epoch) uniqueness contract depends on it."""
+    dict-write last-pop-wins semantics (simulator.py:396), so the
+    documents table stays unique on (doc_id, epoch)."""
     registry = _reg("pin-g", [("1.2.0", False)])
     seeds = [
         {"seed_id": 0, "type": "npm", "url": "cd:/npm/npmjs/-/pin-g", "queue": "normal", "policy": "default"},
@@ -358,3 +360,35 @@ def test_unparseable_seed_url_fails_loudly(spark):
         CrawlSimulator(_reg("x", [("1.0.0", False)]), []).seed(bad, epoch=0)
     with pytest.raises(SparkRuntimeException, match="unparseable seed url"):
         seeds_to_frontier(seeds_df(spark, bad)).collect()
+
+
+def test_epoch_refuses_to_overwrite_a_commit_made_while_it_planned(spark, tmp_path):
+    """A second engine on the same store submits `b` (v1) while run_epoch
+    plans from v0: the epoch raises CommitConflict instead of publishing
+    a v2 built on v0 that drops `b` from the frontier."""
+    from crawler_spark.storage.snapshots import CommitConflict
+
+    registry = registry_df(spark, _reg("race-a", [("1.0.0", False)]) + _reg("race-b", [("1.0.0", False)]))
+
+    def seed(i, name):
+        return {"seed_id": i, "type": "npm", "url": f"cd:/npm/npmjs/-/{name}/1.0.0",
+                "queue": "normal", "policy": "default"}
+
+    eng = CrawlEngine(spark, SnapshotStore(spark, str(tmp_path)), registry)
+    eng.bootstrap(seeds_df(spark, [seed(0, "race-a")]))
+    other = CrawlEngine(spark, SnapshotStore(spark, str(tmp_path)), registry)
+    fetch_and_route = eng._fetch_and_route
+
+    def interloper_commits_first(*args):
+        other.submit_requests(seeds_df(spark, [seed(1, "race-b")]), epoch=0)
+        return fetch_and_route(*args)
+
+    eng._fetch_and_route = interloper_commits_first
+    with pytest.raises(CommitConflict):
+        eng.run_epoch(0)
+    assert eng.store.current_version() == 1
+    assert "cd:/npm/npmjs/-/race-b/1.0.0" in {r["url"] for r in eng.store.read("frontier").collect()}
+    # the losing epoch's data dirs are gone; every dir left is published
+    data = tmp_path / "data"
+    on_disk = {str(data / t / d) for t in os.listdir(data) for d in os.listdir(data / t)}
+    assert on_disk == {d for v in (0, 1) for ds in eng.store.snapshot(v).tables.values() for d in ds}

@@ -62,6 +62,9 @@ def test_flush_queue(store):
     assert left == {"cd:/npm/npmjs/-/a/1.0.0", "cd:/pypi/pypi/-/c/2.0"}
     # previous snapshot still readable (time travel)
     assert store.read("frontier", version=0).count() == 3
+    # the flush keeps the seq high-water mark: the next enqueue must not
+    # reuse a surviving entry's enqueued_seq
+    assert store.snapshot().meta["next_seq"] == 3
 
 
 def test_requeue_deadletters_clears_seen_and_refills_frontier(spark, store):

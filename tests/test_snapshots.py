@@ -91,127 +91,3 @@ def test_stale_commit_raises_conflict_and_keeps_winner(spark, tmp_path):
     data = os.path.join(root, "data")
     assert sorted(os.path.join(data, "t", d) for d in os.listdir(os.path.join(data, "t"))) == winner_dirs
     assert os.listdir(os.path.join(data, "log")) == []
-
-
-def test_engine_runs_transparently_over_chunked_store(spark, tmp_path):
-    """K2 composition: a CrawlEngine whose store chunks oversized span
-    arrays (tiny max_bytes so every payload splits) produces the IDENTICAL
-    documents table as one over a plain store — the engine's own
-    storage-first reads reassemble transparently mid-crawl, and the disk
-    representation really holds multi-chunk rows."""
-    from crawler_spark.data.generators import registry_df, seeds_df
-    from crawler_spark.operators.epoch import CrawlEngine
-
-    spans = [
-        {"kind": "text", "text": f"span {i} " + "x" * 80, "media_ref": None, "offset": i}
-        for i in range(5)
-    ]
-    registry = [
-        {
-            "provider": "npmjs", "namespace": None, "name": n, "version": "1.0.0",
-            "is_prerelease": False, "release_seq": i, "status": 200, "fail_attempts": 0,
-            "source_type": None, "source_provider": None, "source_namespace": None,
-            "source_name": None, "source_revision": None,
-            "payload_spans": spans,
-        }
-        for i, n in enumerate(["pkg-a", "pkg-b"])
-    ]
-    seeds = [
-        {"seed_id": i, "type": "npm", "url": f"cd:/npm/npmjs/-/{n}/1.0.0",
-         "queue": "normal", "policy": "default"}
-        for i, n in enumerate(["pkg-a", "pkg-b"])
-    ]
-
-    def run(store):
-        eng = CrawlEngine(spark, store, registry_df(spark, registry))
-        eng.run(seeds_df(spark, seeds), max_epochs=4)
-        return sorted(
-            (r["doc_id"], r["epoch"], tuple(tuple(s) for s in r["spans"]))
-            for r in store.read("documents").collect()
-        )
-
-    plain = run(SnapshotStore(spark, str(tmp_path / "plain")))
-    chunk_store = SnapshotStore(
-        spark, str(tmp_path / "chunked"),
-        chunk_tables={"documents": {
-            "id_cols": ["doc_id", "epoch"], "spans_col": "spans",
-            "max_bytes": 200, "block_bytes": 100,
-        }},
-    )
-    chunked = run(chunk_store)
-    assert chunked == plain
-    assert len(plain) == 8  # 2 npm payload docs + 2x3 tool docs
-    raw = spark.read.parquet(*chunk_store.snapshot().tables["documents"])
-    assert raw.filter("n_chunks > 1").count() > 0  # payloads really split on disk
-
-CHUNK_CFG = {"documents": {
-    "id_cols": ["doc_id", "epoch"], "spans_col": "spans",
-    "max_bytes": 120, "block_bytes": 60,
-}}
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "doc_id string, epoch long, spans array<struct<kind:string,text:string,media_ref:string,offset:long>>",
-    )
-
-
-def test_read_representation_follows_manifest_not_constructor(spark, tmp_path):
-    """A store written chunked reads back reassembled even from a reader
-    constructed WITHOUT chunk_tables (and a plain store stays plain under
-    a reader constructed WITH it): the manifest records the
-    representation, so a flag mismatch can't surface chunk rows as
-    documents or vice versa."""
-    rows = [("d1", 0, [("text", "x" * 200, None, 0), ("text", "y" * 200, None, 1)]),
-            ("d2", 0, [("text", "tiny", None, 0)])]
-    w = SnapshotStore(spark, str(tmp_path / "s"), chunk_tables=CHUNK_CFG)
-    w.commit(epoch=0, append={"documents": _docs(spark, rows)})
-
-    plain_reader = SnapshotStore(spark, str(tmp_path / "s"))  # no flag
-    got = sorted((r["doc_id"], len(r["spans"])) for r in plain_reader.read("documents").collect())
-    assert got == [("d1", 2), ("d2", 1)]
-    assert "chunk_seq" not in plain_reader.read("documents").columns
-
-    # and the inverse mismatch: plain dirs + chunk-flagged reader
-    p = SnapshotStore(spark, str(tmp_path / "p"))
-    p.commit(epoch=0, append={"documents": _docs(spark, rows)})
-    chunk_reader = SnapshotStore(spark, str(tmp_path / "p"), chunk_tables=CHUNK_CFG)
-    assert chunk_reader.read("documents").count() == 2
-
-
-def test_append_refuses_to_mix_representations(spark, tmp_path):
-    """Appending chunked rows onto plain dirs (or the reverse) raises
-    instead of silently corrupting later reads."""
-    import pytest
-
-    rows = [("d1", 0, [("text", "tiny", None, 0)])]
-    plain = SnapshotStore(spark, str(tmp_path / "s"))
-    plain.commit(epoch=0, append={"documents": _docs(spark, rows)})
-    migrated = SnapshotStore(spark, str(tmp_path / "s"), chunk_tables=CHUNK_CFG)
-    with pytest.raises(ValueError, match="mix representations"):
-        migrated.commit(epoch=1, append={"documents": _docs(spark, rows)})
-    # replace= is the sanctioned migration: full swap may change shape
-    migrated.commit(epoch=1, replace={"documents": _docs(spark, rows)})
-    assert migrated.read("documents").count() == 1
-    # ...after which a plain append is the mismatch and raises
-    back = SnapshotStore(spark, str(tmp_path / "s"))
-    with pytest.raises(ValueError, match="mix representations"):
-        back.commit(epoch=2, append={"documents": _docs(spark, rows)})
-
-
-def test_chunk_key_is_injective_for_hostile_ids(spark, tmp_path):
-    """Distinct id tuples stay distinct documents even when a separator
-    byte inside one id would make their concatenation collide, and when
-    an id column is NULL (concat_ws would skip it)."""
-    spans = [("text", "z" * 90, None, 0)]
-    rows = [
-        ("a\x1f0", 1, spans),   # concat_ws('\x1f') of these two collides:
-        ("a", None, spans),     # 'a\x1f0\x1f1' vs 'a' + skipped NULL...
-        ("a\x1f0\x1f1", None, spans),  # ...vs this literal id
-    ]
-    store = SnapshotStore(spark, str(tmp_path), chunk_tables=CHUNK_CFG)
-    store.commit(epoch=0, append={"documents": _docs(spark, rows)})
-    out = store.read("documents").collect()
-    assert len(out) == 3
-    assert all(len(r["spans"]) == 1 for r in out)
